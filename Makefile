@@ -1,4 +1,4 @@
-.PHONY: dist test check bench clean
+.PHONY: dist test tier1 check bench clean
 
 dist:
 	mkdir -p dist
@@ -8,6 +8,11 @@ dist:
 
 test:
 	python -m pytest tests/ -x -q
+
+# the tier-1 gate exactly as ROADMAP.md states it (env, timeout and flags)
+tier1:
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 check:
 	python tools/check_oracles.py

@@ -114,6 +114,8 @@ def bfs_hops(
         if n_new == 0:
             break
 
+    if checkpointer is not None:
+        checkpointer.flush()
     info = {
         "hops": len(frontier_sizes),
         "frontier_sizes": frontier_sizes,

@@ -460,6 +460,8 @@ def connected_components(
             r = rounds
     finally:
         spark.conf.set(sp_key, sp_saved)
+    if checkpointer is not None:
+        checkpointer.flush()
 
     comps = (
         verts.join(e.select(F.col("u").alias("id"), F.col("v").alias("root")), "id", "left")

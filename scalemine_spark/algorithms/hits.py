@@ -178,6 +178,8 @@ def hits(
         hub = state.select("id", (F.col("hub_raw") / F.lit(s_h)).alias("hub"))
         iter_seconds.append(time.monotonic() - t_it)
 
+    if checkpointer is not None:
+        checkpointer.flush()
     if state is None:  # resumed past the last iteration: nothing to run
         state = checkpointer.read_state(spark, iters - 1)
     scores = state.select(

@@ -105,6 +105,8 @@ def kcore(
             break
         prev_n = n
 
+    if checkpointer is not None:
+        checkpointer.flush()
     info = {
         "k": k,
         "peels_run": len(peel_sizes),

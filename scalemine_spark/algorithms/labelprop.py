@@ -129,6 +129,8 @@ def label_propagation(
         if iters is None and changed == 0:
             break
 
+    if checkpointer is not None:
+        checkpointer.flush()
     info = {"iters": it, "seconds": time.monotonic() - t0, "last_changed": changed}
     labels = labels.select("id", "label")
     sym.unpersist()

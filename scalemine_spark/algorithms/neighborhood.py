@@ -92,7 +92,7 @@ def neighborhood_function(
         .observe(obs0, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
-    counts = [int(obs0.get["n"])]
+    counts = [int(obs0.get["n"] or 0)]
     t0 = time.monotonic()
     for _t in range(1, max_t + 1):
         grown = (
@@ -266,6 +266,8 @@ def hyperball(
             checkpointer.amend_metrics(it, {"sum_regs": float(s)})
         sum_regs.append(s)
 
+    if checkpointer is not None:
+        checkpointer.flush()
     out = state.select("id", "regs", _estimate(m).alias("ball_est"))
     info = {
         "rounds": max_t,

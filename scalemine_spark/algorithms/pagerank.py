@@ -23,8 +23,10 @@ Scale design:
     (atomic manifest; resume = fast-forward to latest committed iteration),
     which also truncates lineage (SURVEY §4.3.1).
 
-Per iteration: 1 scalar action (dangling+delta fused via a self-join on the
-previous state), 1 write action (checkpoint).
+Per iteration: 1 materializing job (localCheckpoint; the L1 delta,
+dangling and total mass ride it as an Observation). With a checkpointer,
+the iteration's parquet write and manifest publish run in the background
+while the next iteration computes (checkpoint.py, write-behind commit).
 """
 
 from __future__ import annotations
@@ -367,6 +369,8 @@ def pagerank(
         if fixed_iters is None and delta < tol:
             break
 
+    if checkpointer is not None:
+        checkpointer.flush()  # the last publish is part of the call
     elapsed = time.monotonic() - t0
     iters_run = it - start_iter
     info = {

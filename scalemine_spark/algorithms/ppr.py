@@ -135,6 +135,8 @@ def personalized_pagerank(
         if fixed_iters is None and delta < tol:
             break
 
+    if checkpointer is not None:
+        checkpointer.flush()
     info = {
         "iters_run": it - start_iter,
         "deltas": deltas,

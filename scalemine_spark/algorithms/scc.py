@@ -194,6 +194,8 @@ def scc(
     else:
         converged = n_rem == 0
 
+    if checkpointer is not None:
+        checkpointer.flush()
     if done is None:  # empty input graph
         done = verts.select("id", F.col("id").alias("scc"))
     info = {

@@ -141,6 +141,8 @@ def sssp(
             converged = True
             break
 
+    if checkpointer is not None:
+        checkpointer.flush()
     info = {
         "rounds_run": len(improved_sizes),
         "improved_sizes": improved_sizes,
