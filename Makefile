@@ -1,4 +1,4 @@
-.PHONY: dist test tier1 check bench clean
+.PHONY: dist test tier1 check bench benchtest clean
 
 dist:
 	mkdir -p dist
@@ -19,6 +19,10 @@ check:
 
 bench:
 	python bench.py
+
+# the benchmark's own tests (tracing ledger, inputs, TracedCheckpointManager)
+benchtest:
+	python3 -m pytest perfbench/test_tracing.py perfbench/test_inputs.py
 
 clean:
 	rm -rf dist .cache .pytest_cache $$(find . -name __pycache__)

@@ -1,4 +1,3 @@
-from scalemine_spark.algorithms.bfs import bfs_hops
 from scalemine_spark.algorithms.clustering import clustering_coefficient
 from scalemine_spark.algorithms.components import connected_components
 from scalemine_spark.algorithms.fsm import frequent_subgraphs
@@ -11,7 +10,7 @@ from scalemine_spark.algorithms.ppr import personalized_pagerank
 from scalemine_spark.algorithms.randomwalk import random_walks
 from scalemine_spark.algorithms.scc import scc
 from scalemine_spark.algorithms.neighborhood import hyperball, neighborhood_function
-from scalemine_spark.algorithms.sssp import sssp
+from scalemine_spark.algorithms.sssp import bfs_hops, sssp
 from scalemine_spark.algorithms.triangles import triangle_count, triangles_per_vertex
 
 __all__ = [

@@ -1,8 +1,6 @@
 """G6 — HITS (hubs & authorities) power iteration [BASELINE.json north_rule:
-link-graph analytics over the edge table; same iterative-DataFrame contract
-as G1-G3: explicit partitioning, one persisted edge cache per join key,
-lineage truncated every iteration, per-iteration checkpoint + metrics,
-resumable mid-algorithm].
+link-graph analytics over the edge table]. Iteration control (resume,
+commit, the two observed L1 sums) is the kernel's (iterate.py).
 
 Semantics (normative): directed deduplicated edge table (src, dst).
 hub_0(u) = 1 for every vertex. Each synchronous iteration k:
@@ -33,10 +31,11 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from scalemine_spark.checkpoint import CheckpointManager
+from scalemine_spark.iterate import iterate, resume
 
 
 def hits(
@@ -67,6 +66,8 @@ def hits(
     """
     from scalemine_spark.tuning import adaptive_partitions
 
+    if iters < 1:
+        raise ValueError("iters must be >= 1")
     spark = edges.sparkSession
     # scale-adaptive loop width (round 6, guide §2) — same derivation and
     # rationale as pagerank._prepare / tuning.py module docstring
@@ -94,25 +95,22 @@ def hits(
         .persist()
     )
 
-    start = 0
-    hub = None
-    s_a = s_h = None
-    if checkpointer is not None:
-        last = checkpointer.latest()
-        if last is not None:
-            state = checkpointer.read_state(spark, last)
-            m = checkpointer.read_manifest(last)["metrics"]
-            s_a, s_h = m["s_a"], m["s_h"]
-            hub = state.select("id", (F.col("hub_raw") / F.lit(s_h)).alias("hub"))
-            start = last + 1
-    if hub is None:
-        hub = verts.select("id", F.lit(1.0).alias("hub"))
+    state, manifest, start = resume(checkpointer, spark)
+    if start > iters:
+        # the store ran past `iters`: answer from iteration iters-1, with
+        # that iteration's own L1 sums (the latest ones would mis-normalize)
+        state = checkpointer.read_state(spark, iters - 1)
+        manifest = checkpointer.read_manifest(iters - 1)
+    a_mats: list[DataFrame] = []  # the live auth half-step cache
 
-    iter_seconds: list[float] = []
-    t0 = time.monotonic()
-    state = None
-    for it in range(start, iters):
-        t_it = time.monotonic()
+    def step(state, it, prev):
+        if state is None:
+            hub = verts.select("id", F.lit(1.0).alias("hub"))
+        else:
+            hub = state.select("id", (F.col("hub_raw") / F.lit(prev["s_h"])).alias("hub"))
+        # the previous iteration's cache served its job and is no longer read
+        if a_mats:
+            a_mats.pop().unpersist()
 
         # half-step 1: raw authority = sum of incoming hub mass.
         # e_by_src joins the V-sized hub vector on src (only the small side
@@ -132,6 +130,7 @@ def hits(
         # (bench_extra, warm rep at 2M edges/local[32], together with the
         # adaptive loop width): hits4 7.4s -> 5.8s.
         a_mat = a_raw.persist()
+        a_mats.append(a_mat)
 
         # half-step 2: raw hub = sum of outgoing RAW authority (scale factor
         # cancels in hub's own normalization), plus the combined state row.
@@ -155,41 +154,30 @@ def hits(
         # float merge order (the extra rows are coalesced 0.0 terms), the
         # same 1e-12 replay tolerance the round-5 two-job form already
         # carried for shuffle-merge ordering.
-        obs_h = Observation(f"hits_h_{it}")
-        combined = combined.observe(
-            obs_h,
-            _s(F.col("auth_raw")).alias("s_a"),
-            _s(F.col("hub_raw")).alias("s_h"),
-        )
-        if checkpointer is not None:
-            state = checkpointer.commit(it, combined, {})
-        else:
-            state = combined.localCheckpoint(eager=True)
-        got = obs_h.get
-        s_a = float(got["s_a"])
-        s_h = float(got["s_h"])
+        return combined, {"s_a": _s(F.col("auth_raw")), "s_h": _s(F.col("hub_raw"))}
+
+    t0 = time.monotonic()
+    loop = iterate(
+        step,
+        state,
+        start,
+        iters,
+        name="hits_h",
+        checkpointer=checkpointer,
+        scalars=manifest["metrics"] if manifest is not None else None,
+    )
+    for a_mat in a_mats:
         a_mat.unpersist()
-        if checkpointer is not None:
-            checkpointer.amend_metrics(
-                it,
-                {"s_a": s_a, "s_h": s_h, "iter_seconds": time.monotonic() - t_it},
-            )
-
-        hub = state.select("id", (F.col("hub_raw") / F.lit(s_h)).alias("hub"))
-        iter_seconds.append(time.monotonic() - t_it)
-
-    if checkpointer is not None:
-        checkpointer.flush()
-    if state is None:  # resumed past the last iteration: nothing to run
-        state = checkpointer.read_state(spark, iters - 1)
-    scores = state.select(
+    last = loop.scalars[-1] if loop.scalars else manifest["metrics"]
+    s_a, s_h = float(last["s_a"]), float(last["s_h"])
+    scores = loop.state.select(
         "id",
         (F.col("auth_raw") / F.lit(s_a)).alias("auth"),
         (F.col("hub_raw") / F.lit(s_h)).alias("hub"),
     )
     info = {
-        "iters_run": len(iter_seconds),
-        "iter_seconds": iter_seconds,
+        "iters_run": len(loop.scalars),
+        "iter_seconds": loop.iter_seconds,
         "seconds": time.monotonic() - t0,
         "s_a": s_a,
         "s_h": s_h,

@@ -1,7 +1,8 @@
 """G9 — k-core decomposition (iterative peeling) as an iterative DataFrame
-job [BASELINE.json north_rule: link-graph analytics over the edge table;
-same iterative contract as G1/G2/G7: persisted edge cache, one logical
-peel per committed round, lineage truncated every round, resumable].
+job [BASELINE.json north_rule: link-graph analytics over the edge table].
+One logical peel per committed round; iteration control (resume, commit,
+the observed survivor count, the converged stop) is the kernel's
+(iterate.py).
 
 Semantics (normative): undirected simple view of the edge table
 (dedup + self-loop drop + symmetrize). The k-core is the maximal subgraph
@@ -29,10 +30,11 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from scalemine_spark.checkpoint import CheckpointManager
+from scalemine_spark.iterate import iterate, resume
 from scalemine_spark.tuning import adaptive_partitions
 
 
@@ -75,44 +77,30 @@ def kcore(
             .agg(F.count("*").alias("core_deg"))
         )
 
-    start = 0
-    alive = None
-    prev_n = None
-    if checkpointer is not None:
-        last = checkpointer.latest()
-        if last is not None:
-            alive = checkpointer.read_state(spark, last)  # (id, core_deg)
-            prev_n = checkpointer.read_manifest(last)["row_count"]
-            start = last + 1
+    alive, manifest, start = resume(checkpointer, spark)  # (id, core_deg)
 
-    peel_sizes: list[int] = []
-    converged = False
+    def step(alive, it, prev):
+        return degrees(alive).filter(F.col("core_deg") >= k), {"n": F.count(F.lit(1))}
+
     t0 = time.monotonic()
-    for it in range(start, max_peels):
-        survivors = degrees(alive).filter(F.col("core_deg") >= k)
-        obs = Observation(f"kcore_{it}")
-        survivors = survivors.observe(obs, F.count(F.lit(1)).alias("n"))
-        if checkpointer is not None:
-            alive = checkpointer.commit(it, survivors, {})
-        else:
-            alive = survivors.localCheckpoint(eager=True)
-        n = int(obs.get["n"] or 0)
-        if checkpointer is not None:
-            checkpointer.amend_metrics(it, {"alive": float(n)})
-        peel_sizes.append(n)
-        if n == 0 or (prev_n is not None and n == prev_n):
-            converged = True
-            break
-        prev_n = n
-
-    if checkpointer is not None:
-        checkpointer.flush()
+    loop = iterate(
+        step,
+        alive,
+        start,
+        max_peels,
+        name="kcore",
+        checkpointer=checkpointer,
+        scalars={"n": manifest["row_count"]} if manifest is not None else None,
+        # converged: nothing left, or the last peel removed nothing
+        until=lambda s, prev: s["n"] == 0 or (prev is not None and s["n"] == prev["n"]),
+        record=lambda s: {"alive": s["n"]},
+    )
     info = {
         "k": k,
-        "peels_run": len(peel_sizes),
-        "alive_sizes": peel_sizes,
-        "converged": converged,
+        "peels_run": len(loop.scalars),
+        "alive_sizes": [s["n"] for s in loop.scalars],
+        "converged": loop.stopped,
         "seconds": time.monotonic() - t0,
     }
     und.unpersist()
-    return alive, info
+    return loop.state, info

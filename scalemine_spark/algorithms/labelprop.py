@@ -9,17 +9,20 @@ keep their label. Runs a fixed number of iterations or until fixpoint
 
 Kernel (SURVEY A6): groupBy(id, label).count() then
 max(struct(cnt, -label)) — lexicographic struct max == (max count,
-then min label) — all JVM-side, no window shuffle needed.
+then min label) — all JVM-side, no window shuffle needed. Iteration
+control (resume, commit, the observed changed-count, the fixpoint stop) is
+the kernel's (iterate.py).
 """
 
 from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from scalemine_spark.checkpoint import CheckpointManager
+from scalemine_spark.iterate import iterate, resume
 
 
 def label_propagation(
@@ -66,22 +69,11 @@ def label_propagation(
         .persist()
     )
 
-    start = 0
-    labels = None
-    if checkpointer is not None:
-        last = checkpointer.latest()
-        if last is not None:
-            labels = checkpointer.read_state(spark, last)
-            start = last + 1
+    labels, _, start = resume(checkpointer, spark)
     if labels is None:
         labels = verts.select("id", F.col("id").alias("label"))
 
-    total = iters if iters is not None else max_iters
-    t0 = time.monotonic()
-    it = start
-    changed = -1
-    while it < total:
-        t_it = time.monotonic()
+    def step(labels, it, prev):
         # neighbor labels: edge (src,dst) brings label(dst) to src
         nbr = sym.join(
             labels.select(F.col("id").alias("dst"), "label"), "dst"
@@ -97,6 +89,7 @@ def label_propagation(
             F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))).alias("m")
         ).select("id", (-F.col("m.neg")).alias("new_label"))
         # previous label rides along as `prev` -> changed-count is a scan-agg
+        # observed on the materializing action
         new_labels = (
             labels.join(new, "id", "left")
             .select(
@@ -105,34 +98,26 @@ def label_propagation(
                 F.col("label").alias("prev"),
             )
         )
+        changed = F.sum(F.when(F.col("label") != F.col("prev"), 1).otherwise(0))
+        return new_labels, {"changed": changed}
 
-        # changed-count rides the materializing action (Observation):
-        # one Spark job per iteration.
-        obs = Observation(f"lpa_changed_{it}")
-        new_labels = new_labels.observe(
-            obs,
-            F.sum(F.when(F.col("label") != F.col("prev"), 1).otherwise(0)).alias("changed"),
-        )
-        if checkpointer is not None:
-            committed = checkpointer.commit(it, new_labels, {})
-        else:
-            # truncate every iteration (branching plan growth, SURVEY §4.3.1)
-            committed = new_labels.localCheckpoint(eager=True)
-
-        changed = int(obs.get["changed"] or 0)
-        if checkpointer is not None:
-            checkpointer.amend_metrics(
-                it, {"changed": float(changed), "iter_seconds": time.monotonic() - t_it}
-            )
-        labels = committed
-        it += 1
-        if iters is None and changed == 0:
-            break
-
-    if checkpointer is not None:
-        checkpointer.flush()
-    info = {"iters": it, "seconds": time.monotonic() - t0, "last_changed": changed}
-    labels = labels.select("id", "label")
+    t0 = time.monotonic()
+    loop = iterate(
+        step,
+        labels,
+        start,
+        iters if iters is not None else max_iters,
+        name="lpa_changed",
+        checkpointer=checkpointer,
+        until=None if iters is not None else (lambda s, _: s["changed"] == 0),
+    )
+    info = {
+        "iters": start + len(loop.scalars),
+        "iters_run": len(loop.scalars),
+        "seconds": time.monotonic() - t0,
+        "last_changed": loop.scalars[-1]["changed"] if loop.scalars else -1,
+    }
+    labels = loop.state.select("id", "label")
     sym.unpersist()
     verts.unpersist()
     return labels, info

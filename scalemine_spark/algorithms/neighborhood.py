@@ -33,8 +33,9 @@ the wire — then (2) a groupBy (id) pos-sorted reassembly of the m
 surviving skinny rows per vertex. (The tempting one-exchange variant —
 collect_list of whole register arrays reduced with zip_with/greatest —
 has NO map-side reduction, so a hub vertex ships deg×m values; two
-combines beat one shuffle at web scale.) No Python in the loop; lineage
-truncated per round (the G1/G2/G7 rule).
+combines beat one shuffle at web scale.) No Python in the loop; iteration
+control (resume, commit, the observed register sum) is the kernel's
+(iterate.py).
 """
 
 from __future__ import annotations
@@ -46,6 +47,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from scalemine_spark.checkpoint import CheckpointManager
+from scalemine_spark.iterate import iterate, materialize, resume
 from scalemine_spark.tuning import adaptive_partitions
 
 
@@ -219,59 +221,45 @@ def hyperball(
     )
     verts = _verts(e, p)
 
-    start = 1
-    state = None
-    if checkpointer is not None:
-        last = checkpointer.latest()
-        if last is not None:
-            state = checkpointer.read_state(spark, last)
-            # resuming with a different m would silently apply _estimate(m)
-            # to wrong-width registers (round-5 advisory): validate the
-            # checkpointed register width before trusting the state
-            probe = state.select(F.size("regs").alias("w")).first()
-            if probe is not None and int(probe["w"]) != m:
-                raise ValueError(
-                    f"hyperball resume: checkpointed register width "
-                    f"{int(probe['w'])} != requested m={m} — rerun with the "
-                    "original m or start a fresh checkpoint directory"
-                )
-            start = last + 1
-    if state is None:
-        state = _init_registers(verts, m)
-        if checkpointer is not None:
-            state = checkpointer.commit(0, state, {"round": 0.0})
-        else:
-            state = state.localCheckpoint(eager=True)
+    state, _, start = resume(checkpointer, spark)
+    if state is not None:
+        # resuming with a different m would silently apply _estimate(m)
+        # to wrong-width registers (round-5 advisory): validate the
+        # checkpointed register width before trusting the state
+        probe = state.select(F.size("regs").alias("w")).first()
+        if probe is not None and int(probe["w"]) != m:
+            raise ValueError(
+                f"hyperball resume: checkpointed register width "
+                f"{int(probe['w'])} != requested m={m} — rerun with the "
+                "original m or start a fresh checkpoint directory"
+            )
+    else:
+        state = materialize(_init_registers(verts, m), 0, checkpointer, {"round": 0.0})
         start = 1
 
-    sum_regs: list[int] = []
-    t0 = time.monotonic()
-    for it in range(start, max_t + 1):
+    def step(state, it, prev):
         # out-ball: v absorbs the counters of its out-neighbors w (v -> w)
         msgs = (
             e.join(state.withColumnRenamed("id", "dst"), "dst")
             .select(F.col("src").alias("id"), "regs")
         )
         merged = _merge_registers(state, msgs)
-        obs = Observation(f"hb_{it}")
-        merged = merged.observe(
-            obs, F.sum(F.aggregate("regs", F.lit(0), lambda a, r: a + r)).alias("s")
-        )
-        if checkpointer is not None:
-            state = checkpointer.commit(it, merged, {})
-        else:
-            state = merged.localCheckpoint(eager=True)
-        s = int(obs.get["s"] or 0)  # empty graph: SUM over zero rows is NULL
-        if checkpointer is not None:
-            checkpointer.amend_metrics(it, {"sum_regs": float(s)})
-        sum_regs.append(s)
+        return merged, {"s": F.sum(F.aggregate("regs", F.lit(0), lambda a, r: a + r))}
 
-    if checkpointer is not None:
-        checkpointer.flush()
-    out = state.select("id", "regs", _estimate(m).alias("ball_est"))
+    t0 = time.monotonic()
+    loop = iterate(
+        step,
+        state,
+        start,
+        max_t + 1,
+        name="hb",
+        checkpointer=checkpointer,
+        record=lambda s: {"sum_regs": s["s"]},
+    )
+    out = loop.state.select("id", "regs", _estimate(m).alias("ball_est"))
     info = {
         "rounds": max_t,
-        "sum_regs": sum_regs,
+        "sum_regs": [s["s"] for s in loop.scalars],
         "seconds": time.monotonic() - t0,
         "m": m,
     }

@@ -19,25 +19,23 @@ Scale design:
     join key from the shuffle entirely.
   * edges are repartitioned on src once and persisted; the per-iteration join
     reuses that partitioning (no re-shuffle of the big side per iteration).
-  * Every iteration commits state + metrics through CheckpointManager
-    (atomic manifest; resume = fast-forward to latest committed iteration),
-    which also truncates lineage (SURVEY §4.3.1).
 
-Per iteration: 1 materializing job (localCheckpoint; the L1 delta,
-dangling and total mass ride it as an Observation). With a checkpointer,
-the iteration's parquet write and manifest publish run in the background
-while the next iteration computes (checkpoint.py, write-behind commit).
+Iteration control — resume, commit every `checkpoint_interval` iterations
+(write-behind), lineage truncation, one materializing job with the L1
+delta, dangling and total mass observed on it, the tol stop — is the
+iteration kernel's (iterate.py).
 """
 
 from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from scalemine_spark.checkpoint import CheckpointManager
 from scalemine_spark.graph import vertex_ids
+from scalemine_spark.iterate import iterate, resume
 
 
 def _prepare(edges: DataFrame, num_partitions: int | None, weight_col: str | None = None):
@@ -109,7 +107,6 @@ def pagerank(
     hub_threshold: int | str | None = "auto",
     hub_floor: int = 1024,
     with_prev: bool = False,
-    spmv: str = "codegen",
     exact_sums: bool = False,
     weight_col: str | None = None,
 ) -> tuple[DataFrame, dict]:
@@ -117,10 +114,6 @@ def pagerank(
 
     fixed_iters: run exactly that many iterations, skip convergence checks
     (used by the driver-oracle query, which must be deterministic in shape).
-    spmv: 'codegen' (JVM HashAggregate partial+final — default) or 'arrow'
-    (operators.spmv mapInArrow numpy partial combine, the U3 kernel, kept as
-    the alternate inner path; A/B at 60M edges measured it ~1.7x SLOWER than
-    codegen — BENCH/ab_pr_variants.json — so codegen stays default).
     hub_threshold: 'auto' (default) picks the out-degree threshold from the
     degree distribution — vertices in roughly the top 1/1000 by out-degree
     (capped at 64k hubs so the broadcast rank slice stays ~1 MB), with a
@@ -153,10 +146,8 @@ def pagerank(
     including all-zero-weight ones, are dangling). The iteration plan is
     IDENTICAL to the unweighted one (out_deg becomes the out-weight column,
     the SpMV multiplies by ew before the same partial agg); weight_col=None
-    preserves the unweighted path bit-for-bit. Requires spmv='codegen'.
+    preserves the unweighted path bit-for-bit.
     """
-    if weight_col is not None and spmv == "arrow":
-        raise ValueError("weight_col requires the codegen SpMV path")
     spark = edges.sparkSession
     e, verts, p = _prepare(edges, num_partitions, weight_col)
     # one scalar job yields BOTH |V| and max out-degree — the max lets the
@@ -172,13 +163,7 @@ def pagerank(
     if n == 0:
         return verts.select("id", F.lit(0.0).alias("rank")), {"iters": 0, "n": 0}
 
-    start_iter = 0
-    state = None
-    if checkpointer is not None:
-        last = checkpointer.latest()
-        if last is not None:
-            state = checkpointer.read_state(spark, last)  # (id, out_deg, rank)
-            start_iter = last + 1
+    state, _, start_iter = resume(checkpointer, spark)  # (id, out_deg, rank)
     if state is None:
         state = verts.withColumn("rank", F.lit(1.0 / n))
 
@@ -249,8 +234,6 @@ def pagerank(
             hubs = (hub_ids, e_hub, e_tail)
 
     total_iters = fixed_iters if fixed_iters is not None else max_iters
-    deltas: list[float] = []
-    iter_secs: list[float] = []
     t0 = time.monotonic()
 
     # one-time scalar pass; thereafter dangling/total come from the fused
@@ -266,11 +249,8 @@ def pagerank(
         _s(F.col("rank")).alias("total"),
     ).collect()[0]
     dangling = float(scal["dm"] or 0.0)
-    total_mass = float(scal["total"] or 0.0)
 
-    it = start_iter
-    while it < total_iters:
-        t_it = time.monotonic()
+    def step(state, it, prev):
         w = state.filter(F.col("out_deg") > 0).select(
             F.col("id").alias("src"), (F.col("rank") / F.col("out_deg")).alias("w")
         )
@@ -282,27 +262,15 @@ def pagerank(
             )
         else:
             contrib_in = e.join(w, "src")
-        if spmv == "arrow":
-            if exact_sums:
-                raise ValueError(
-                    "exact_sums requires the codegen SpMV path: the arrow "
-                    "kernel partial-combines in float64 (order-sensitive)"
-                )
-            from scalemine_spark.operators.spmv import spmv_partial_arrow
-
-            contribs = spmv_partial_arrow(contrib_in.select("dst", "w"))
-        else:
-            cexpr = F.col("w") * F.col("ew") if weight_col else F.col("w")
-            contribs = contrib_in.groupBy("dst").agg(
-                _s(cexpr).alias("contrib")
-            )
+        cexpr = F.col("w") * F.col("ew") if weight_col else F.col("w")
+        contribs = contrib_in.groupBy("dst").agg(_s(cexpr).alias("contrib"))
 
         # `base` changes every iteration and is shipped as a plain literal:
         # measured (tools A/B, round 2) the literal is ~0.2s/iter FASTER than
         # the broadcast-1-row-relation alternative — the tiny broadcast job
         # costs more than any codegen recompilation the changing literal
         # causes on Spark 4.1.
-        base = (1.0 - d) / n + d * dangling / n
+        base = (1.0 - d) / n + d * prev["dm"] / n
         new_state = (
             state.join(contribs, state.id == contribs.dst, "left")
             .select(
@@ -312,74 +280,51 @@ def pagerank(
                 F.col("rank").alias("pr"),
             )
         )
+        # fused stats ride the materializing action (the kernel's
+        # Observation): L1 delta vs previous vector, next iteration's
+        # dangling mass, and total mass for the invariant check.
+        stats = {
+            "l1": _s(F.abs(F.col("rank") - F.col("pr"))),
+            "dm": _s(F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(0.0)),
+            "total": _s(F.col("rank")),
+        }
+        # `pr` exists only to feed the L1 delta, which the CollectMetrics
+        # node computes upstream — drop it from the committed state so the
+        # next iteration's join shuffle and the checkpoint ship 3 columns,
+        # not 4 (the U6 cogroup consumer passes with_prev=True and keeps the
+        # previous vector). Measured at 16M/local[8] (tools/ab_state_slim.py):
+        # -8% committed-state bytes, -3.3% steady-state iteration wall —
+        # modest because the row-cache per-row overhead, not the dropped
+        # double, dominates.
+        return new_state, stats, None if with_prev else ["id", "out_deg", "rank"]
 
-        # fused stats ride the materializing action itself (Observation):
-        # ONE Spark job per iteration — L1 delta vs previous vector, next
-        # iteration's dangling mass, and total mass for the invariant check.
-        obs = Observation(f"pr_stats_{it}")
-        new_state = new_state.observe(
-            obs,
-            _s(F.abs(F.col("rank") - F.col("pr"))).alias("l1"),
-            _s(F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(0.0)).alias("dm"),
-            _s(F.col("rank")).alias("total"),
-        )
-        if not with_prev:
-            # `pr` exists only to feed the L1 delta, which the CollectMetrics
-            # node just computed upstream — drop it from the committed state
-            # so the next iteration's join shuffle and the checkpoint ship 3
-            # columns, not 4 (the U6 cogroup consumer passes with_prev=True
-            # and keeps the previous vector). Measured at 16M/local[8]
-            # (tools/ab_state_slim.py): -8% committed-state bytes, -3.3%
-            # steady-state iteration wall — modest because the row-cache
-            # per-row overhead, not the dropped double, dominates.
-            new_state = new_state.select("id", "out_deg", "rank")
-
-        do_ckpt = checkpointer is not None and (
-            (it % checkpoint_interval == 0) or it == total_iters - 1
-        )
-        if do_ckpt:
-            committed = checkpointer.commit(it, new_state, {})
-        else:
-            # truncate the logical plan EVERY iteration: state is referenced
-            # twice per step, so an untruncated plan doubles each iteration
-            # and Catalyst analysis blows up around iter ~20 (SURVEY §4.3.1).
-            committed = new_state.localCheckpoint(eager=True)
-
-        st = obs.get  # fired by the write/checkpoint above
-        delta = float(st["l1"] or 0.0)
-        dangling = float(st["dm"] or 0.0)
-        total_mass = float(st["total"] or 0.0)
-        deltas.append(delta)
-
-        if do_ckpt:
-            # amend the committed manifest with the measured metrics
-            checkpointer.amend_metrics(
-                it,
-                {
-                    "l1_delta": delta,
-                    "dangling_mass": dangling,
-                    "total_mass": total_mass,
-                    "iter_seconds": time.monotonic() - t_it,
-                    "edges": float(n_edges),
-                },
-            )
-        state = committed
-        iter_secs.append(time.monotonic() - t_it)
-        it += 1
-        if fixed_iters is None and delta < tol:
-            break
-
-    if checkpointer is not None:
-        checkpointer.flush()  # the last publish is part of the call
+    loop = iterate(
+        step,
+        state,
+        start_iter,
+        total_iters,
+        name="pr_stats",
+        checkpointer=checkpointer,
+        every=checkpoint_interval,
+        scalars={"dm": dangling},
+        until=None if fixed_iters is not None else (lambda s, _: s["l1"] < tol),
+        record=lambda s: {
+            "l1_delta": s["l1"],
+            "dangling_mass": s["dm"],
+            "total_mass": s["total"],
+            "edges": float(n_edges),
+        },
+    )
+    state = loop.state
     elapsed = time.monotonic() - t0
-    iters_run = it - start_iter
+    iters_run = len(loop.scalars)
     info = {
-        "iters": it,
+        "iters": start_iter + iters_run,
         "iters_run": iters_run,
         "n_vertices": n,
         "n_edges": n_edges,
-        "deltas": deltas,
-        "iter_seconds": iter_secs,
+        "deltas": [float(s["l1"]) for s in loop.scalars],
+        "iter_seconds": loop.iter_seconds,
         "seconds": elapsed,
         "edges_per_sec": (n_edges * iters_run / elapsed) if elapsed > 0 else float("nan"),
         "hub_threshold": hub_threshold,

@@ -1,8 +1,7 @@
 """G8 — personalized PageRank (random walk with restart to a seed set) as
 an iterative DataFrame job [BASELINE.json north_rule: link-graph analytics
-over the edge table; same iterative contract as G1: one persisted
-src-partitioned edge cache, fused Observation stats, one Spark job per
-iteration, lineage truncated every iteration, checkpoint/resume].
+over the edge table]. Iteration control (resume, commit, the observed L1
+delta and dangling mass, the tol stop) is the kernel's (iterate.py).
 
 Semantics (normative): seed set S (the personalization vector is uniform
 over S), damping d. With tele(v) = 1/|S ∩ V| for v ∈ S else 0:
@@ -32,11 +31,12 @@ from __future__ import annotations
 import time
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from scalemine_spark.algorithms.pagerank import _prepare
 from scalemine_spark.checkpoint import CheckpointManager
+from scalemine_spark.iterate import iterate, resume
 
 _MAX_SEED_LITERALS = 100_000
 
@@ -76,36 +76,24 @@ def personalized_pagerank(
         raise ValueError("none of the seeds exist in the graph")
     tele = F.when(is_seed, F.lit(1.0 / n_seed)).otherwise(F.lit(0.0))
 
-    start_iter = 0
-    state = None
-    dangling = None
-    if checkpointer is not None:
-        last = checkpointer.latest()
-        if last is not None:
-            state = checkpointer.read_state(spark, last)  # (id, out_deg, rank)
-            dangling = checkpointer.read_manifest(last)["metrics"]["dm"]
-            start_iter = last + 1
+    state, manifest, start_iter = resume(checkpointer, spark)  # (id, out_deg, rank)
     if state is None:
         state = verts.select("id", "out_deg", tele.alias("rank")).localCheckpoint(
             eager=True
         )
-
-    if dangling is None:
         scal = state.agg(
             _s(F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(0.0)).alias("dm")
         ).collect()[0]
         dangling = float(scal["dm"] or 0.0)
+    else:
+        dangling = manifest["metrics"]["dm"]
 
-    total_iters = fixed_iters if fixed_iters is not None else max_iters
-    deltas: list[float] = []
-    t0 = time.monotonic()
-    it = start_iter
-    while it < total_iters:
+    def step(state, it, prev):
         w = state.filter(F.col("out_deg") > 0).select(
             F.col("id").alias("src"), (F.col("rank") / F.col("out_deg")).alias("w")
         )
         contribs = e.join(w, "src").groupBy("dst").agg(_s(F.col("w")).alias("contrib"))
-        restart = (1.0 - d) + d * dangling  # mass returning to the seed set
+        restart = (1.0 - d) + d * prev["dm"]  # mass returning to the seed set
         new_state = state.join(contribs, state.id == contribs.dst, "left").select(
             "id",
             "out_deg",
@@ -114,35 +102,30 @@ def personalized_pagerank(
             ),
             F.col("rank").alias("pr"),
         )
-        obs = Observation(f"ppr_stats_{it}")
-        new_state = new_state.observe(
-            obs,
-            _s(F.abs(F.col("rank") - F.col("pr"))).alias("l1"),
-            _s(F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(0.0)).alias("dm"),
-        )
-        new_state = new_state.select("id", "out_deg", "rank")
-        if checkpointer is not None:
-            state = checkpointer.commit(it, new_state, {})
-        else:
-            state = new_state.localCheckpoint(eager=True)
-        st = obs.get
-        delta = float(st["l1"] or 0.0)
-        dangling = float(st["dm"] or 0.0)
-        if checkpointer is not None:
-            checkpointer.amend_metrics(it, {"dm": dangling, "l1_delta": delta})
-        deltas.append(delta)
-        it += 1
-        if fixed_iters is None and delta < tol:
-            break
+        stats = {
+            "l1": _s(F.abs(F.col("rank") - F.col("pr"))),
+            "dm": _s(F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(0.0)),
+        }
+        return new_state, stats, ["id", "out_deg", "rank"]
 
-    if checkpointer is not None:
-        checkpointer.flush()
+    t0 = time.monotonic()
+    loop = iterate(
+        step,
+        state,
+        start_iter,
+        fixed_iters if fixed_iters is not None else max_iters,
+        name="ppr_stats",
+        checkpointer=checkpointer,
+        scalars={"dm": dangling},
+        until=None if fixed_iters is not None else (lambda s, _: s["l1"] < tol),
+        record=lambda s: {"dm": s["dm"], "l1_delta": s["l1"]},
+    )
     info = {
-        "iters_run": it - start_iter,
-        "deltas": deltas,
+        "iters_run": len(loop.scalars),
+        "deltas": [float(s["l1"]) for s in loop.scalars],
         "n_seeds": n_seed,
         "seconds": time.monotonic() - t0,
     }
     e.unpersist()
     verts.unpersist()
-    return state.select("id", "rank"), info
+    return loop.state.select("id", "rank"), info

@@ -1,8 +1,9 @@
 """G10 — weighted single-source shortest paths (frontier Bellman-Ford) as
 an iterative DataFrame job [BASELINE.json north_rule: link-graph analytics
-over the edge table; same iterative contract as G1/G2/G7/G9: persisted
-edge cache, lineage truncated every round, per-round checkpoint + metrics,
-resumable mid-algorithm].
+over the edge table], and G7 — multi-source BFS hop distance, which is the
+same loop with unit weights. Iteration control (resume, commit, the
+observed improved-count, the empty-frontier stop) is the kernel's
+(iterate.py).
 
 Semantics (normative): directed weighted edges (src, dst, weight) with
 non-negative integer (or exact-decimal) weights, source set S. After R
@@ -12,7 +13,7 @@ well-defined whether or not the fixpoint has been reached
 (info['converged'] says which). Vertices unreachable within R hops are
 absent. With integer weights every operation is integer MIN / set algebra,
 so the result is EXACTLY deterministic under any shuffle-merge order (the
-same argument as G7/G9; no floating accumulation anywhere).
+same argument as G9; no floating accumulation anywhere).
 
 Scale plan (100 TB): frontier Bellman-Ford — per round only the vertices
 whose distance IMPROVED last round re-relax (`frontier join edges on src`,
@@ -30,10 +31,11 @@ from __future__ import annotations
 import time
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from scalemine_spark.checkpoint import CheckpointManager
+from scalemine_spark.iterate import iterate, materialize, resume
 from scalemine_spark.tuning import adaptive_partitions
 
 
@@ -51,6 +53,40 @@ def sssp(
     give the exactly-deterministic contract (doubles work but inherit the
     usual float-min caveats on exact ties).
     """
+    return _relax(
+        edges, F.col(weight_col), sources, max_rounds, checkpointer, num_partitions, "improved"
+    )
+
+
+def bfs_hops(
+    edges: DataFrame,
+    sources: Sequence[int],
+    max_hops: int = 64,
+    checkpointer: CheckpointManager | None = None,
+    num_partitions: int | None = None,
+) -> tuple[DataFrame, dict]:
+    """G7 — multi-source BFS hop distance: SSSP with unit weights.
+
+    Returns (dist DF (id, dist long) for reached vertices only, info).
+    dist(v) = length of the shortest directed path from any s in S to v;
+    vertices unreachable within max_hops are absent, sources not in the
+    graph are ignored. With unit weights a round's improved vertices are
+    exactly the vertices first reached at that hop, so info's
+    frontier_sizes[h-1] = #vertices at distance h (0 once converged).
+    """
+    dist, info = _relax(
+        edges, F.lit(1).cast("long"), sources, max_hops, checkpointer, num_partitions, "frontier"
+    )
+    return dist, {
+        "hops": info["rounds_run"],
+        "frontier_sizes": info["improved_sizes"],
+        "seconds": info["seconds"],
+    }
+
+
+def _relax(edges, weight, sources, max_rounds, checkpointer, num_partitions, metric):
+    """Frontier Bellman-Ford over (src, dst, weight); `metric` names the
+    improved-count in the manifest metrics."""
     spark = edges.sparkSession
     # scale-adaptive loop width (round 6, guide §2) — same derivation and
     # rationale as pagerank._prepare / tuning.py module docstring
@@ -61,7 +97,7 @@ def sssp(
     # of re-sorting E per round (the G1/G6 edge-cache rule; the same miss
     # cost 1.8x on g12's lookup cache, BENCH/new_algos_r5.json)
     e = (
-        edges.select("src", "dst", F.col(weight_col).alias("w"))
+        edges.select("src", "dst", weight.alias("w"))
         .repartition(p, "src")
         .sortWithinPartitions("src")
         .persist()
@@ -76,30 +112,18 @@ def sssp(
         .distinct()
     )
 
-    start = 0
-    state = None  # (id, dist, improved)
-    if checkpointer is not None:
-        last = checkpointer.latest()
-        if last is not None:
-            state = checkpointer.read_state(spark, last)
-            start = last + 1
+    state, _, start = resume(checkpointer, spark)  # (id, dist, improved)
     if state is None:
-        state = verts.filter(F.col("id").isin(list(sources))).select(
+        seeds = verts.filter(F.col("id").isin(list(sources))).select(
             "id",
             F.lit(0).cast("long").alias("dist"),
             F.lit(True).alias("improved"),
         )
-        if checkpointer is not None:
-            state = checkpointer.commit(0, state, {"improved": -1.0})
-            start = 1
-        else:
-            state = state.localCheckpoint(eager=True)
-            start = 1
+        # iteration index 0 commits the seed table; rounds start at 1
+        state = materialize(seeds, 0, checkpointer, {metric: -1.0})
+        start = 1
 
-    improved_sizes: list[int] = []
-    converged = False
-    t0 = time.monotonic()
-    for it in range(start, max_rounds + 1):
+    def step(state, it, prev):
         frontier = state.filter("improved").select(
             F.col("id").alias("src"), F.col("dist").alias("fdist")
         )
@@ -125,29 +149,24 @@ def sssp(
                 ).alias("improved"),
             )
         )
-        obs = Observation(f"sssp_{it}")
-        merged = merged.observe(
-            obs, F.sum(F.col("improved").cast("long")).alias("n")
-        )
-        if checkpointer is not None:
-            state = checkpointer.commit(it, merged, {})
-        else:
-            state = merged.localCheckpoint(eager=True)
-        n_imp = int(obs.get["n"] or 0)
-        if checkpointer is not None:
-            checkpointer.amend_metrics(it, {"improved": float(n_imp)})
-        improved_sizes.append(n_imp)
-        if n_imp == 0:
-            converged = True
-            break
+        return merged, {"n": F.sum(F.col("improved").cast("long"))}
 
-    if checkpointer is not None:
-        checkpointer.flush()
+    t0 = time.monotonic()
+    loop = iterate(
+        step,
+        state,
+        start,
+        max_rounds + 1,
+        name="sssp",
+        checkpointer=checkpointer,
+        until=lambda s, _: s["n"] == 0,
+        record=lambda s: {metric: s["n"]},
+    )
     info = {
-        "rounds_run": len(improved_sizes),
-        "improved_sizes": improved_sizes,
-        "converged": converged,
+        "rounds_run": len(loop.scalars),
+        "improved_sizes": [s["n"] for s in loop.scalars],
+        "converged": loop.stopped,
         "seconds": time.monotonic() - t0,
     }
     e.unpersist()
-    return state.select("id", "dist"), info
+    return loop.state.select("id", "dist"), info

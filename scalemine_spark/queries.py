@@ -320,8 +320,8 @@ def g6_hits(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # G7 — multi-source BFS hop distance, bounded at BFS_HOPS so the unrolled
 # min-propagation oracle is exact (gedges' layered shape has diameter ~3
-# from the seed layer; 6 leaves headroom). Pure set ops + first-reach
-# assignment — exactly deterministic, no float accumulation.
+# from the seed layer; 6 leaves headroom). bfs_hops is unit-weight SSSP:
+# integer MIN over hop counts — exactly deterministic, no float accumulation.
 # ---------------------------------------------------------------------------
 
 BFS_HOPS = 6

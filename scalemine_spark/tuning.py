@@ -20,20 +20,9 @@ for parquet scans — no extra Spark job), clamped to
     small workloads, never starve big ones;
   * locally it lands at defaultParallelism (= the core count), which
     keeps every core busy while halving the per-stage task count.
-
-``loop_shuffle_partitions`` applies the derived width to the session
-shuffle-partitions conf for the duration of a loop (so the loop's
-groupBy/join exchanges match the explicit repartitions) and restores the
-previous value on exit — the same session-global-conf pattern (and the
-same shared-session caveat, warned loudly) as components.py's tail-round
-coalescing.
 """
 
 from __future__ import annotations
-
-import contextlib
-import warnings
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 
@@ -70,28 +59,3 @@ def adaptive_partitions(df: DataFrame, session_p: int | None = None) -> int:
     want = -(-size // TARGET_BYTES_PER_PARTITION)
     return int(min(session_p, max(dp, want)))
 
-
-@contextlib.contextmanager
-def loop_shuffle_partitions(spark, p: int) -> Iterator[None]:
-    """Set spark.sql.shuffle.partitions = p for the duration of a loop,
-    restoring the previous value afterwards (components.py pattern). The
-    conf is session-global while active — engine jobs run one algorithm
-    per session (cli/bench/protocol); shared-session services should hand
-    each algorithm its own session (warned below, as in CC)."""
-    key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(key)
-    if spark.sparkContext.statusTracker().getActiveJobsIds():
-        warnings.warn(
-            "iterative loop: other Spark jobs are active on this session; "
-            "the loop narrows the session-global spark.sql.shuffle."
-            "partitions while it runs, which would affect any query planned "
-            "concurrently. Give the algorithm its own SparkSession in "
-            "shared-session services.",
-            RuntimeWarning,
-            stacklevel=3,
-        )
-    spark.conf.set(key, str(p))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, saved)

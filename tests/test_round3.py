@@ -130,22 +130,6 @@ def test_extract_edges_nullable_html_end_to_end(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_pagerank_arrow_spmv_matches_codegen(spark):
-    """The alternate Arrow inner path must be numerically identical to the
-    codegen SpMV (same partial-sum tree up to float assoc; tolerance 1e-12)."""
-    from scalemine_spark.algorithms import pagerank
-    from scalemine_spark import fixtures as FX
-    from tests.conftest import edges_df
-
-    e = edges_df(spark, FX.g_karate_like())
-    a, _ = pagerank(e, fixed_iters=6)
-    b, _ = pagerank(e, fixed_iters=6, spmv="arrow")
-    ra = {r["id"]: r["rank"] for r in a.collect()}
-    rb = {r["id"]: r["rank"] for r in b.collect()}
-    assert ra.keys() == rb.keys()
-    assert all(abs(ra[k] - rb[k]) < 1e-12 for k in ra)
-
-
 def test_binary_metadata_values_and_nulls(spark):
     from scalemine_spark.functions.multimodal import binary_metadata
 

@@ -1024,18 +1024,6 @@ def test_weighted_pagerank_unit_weights_equal_unweighted(spark):
         assert abs(b[v] - w[v]) < 1e-15, (v, b[v], w[v])
 
 
-def test_weighted_pagerank_rejects_arrow_path(spark):
-    import pytest as _pytest
-
-    from scalemine_spark.algorithms import pagerank
-
-    from tests.conftest import edges_df
-
-    e = edges_df(spark, [(1, 2)]).withColumn("weight", F.lit(1.0))
-    with _pytest.raises(ValueError, match="codegen"):
-        pagerank(e, fixed_iters=1, weight_col="weight", spmv="arrow")
-
-
 # ---------------------------------------------------------------------------
 # G13 — Adamic-Adar link prediction
 # ---------------------------------------------------------------------------
