@@ -76,14 +76,6 @@ def main() -> None:
     spark = get_spark("scalemine-bench", cores=CPUS, shuffle_partitions=2 * CPUS)
     spark.sparkContext.setLogLevel("ERROR")
 
-    # pre-fault the driver scratch arena once at setup (scratch.py module
-    # docstring: this VM's lazy page restore costs ~200us per fresh page,
-    # which would otherwise land inside rep 1 of any section doing large
-    # driver-side numpy/Arrow work, e.g. the CC endgame)
-    from scalemine_spark.scratch import prime_driver_arena
-
-    prime_driver_arena()
-
     sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in SF_DIR else -1.0
 
     ppath, _ = materialize_pages(

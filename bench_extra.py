@@ -71,12 +71,10 @@ def main() -> None:
     from scalemine_spark.extract import extract_edges
     from scalemine_spark.fixtures import materialize_pages
     from scalemine_spark.operators.similarity import cosine_topk
-    from scalemine_spark.scratch import prime_driver_arena
     from scalemine_spark.session import get_spark
 
     spark = get_spark("scalemine-bench-extra", cores=CPUS, shuffle_partitions=2 * CPUS)
     spark.sparkContext.setLogLevel("ERROR")
-    prime_driver_arena()
 
     ppath, _ = materialize_pages(
         f"{SF_DIR}/documents.parquet", os.path.join(REPO, ".cache"),

@@ -12,10 +12,12 @@ smaller id"). Each round:
     emit (v, m(u)) for v ∈ N≤(u) ∪ {u}, v ≠ m(u).
 
 Converges in O(log n) rounds to a star forest (child -> component-min root).
-Convergence test: edge-set fingerprint (count + xor of xxhash64(u,v)) stable
-across a round — one scalar action per round instead of a full set-difference
-shuffle. Each round's output is checkpointed (atomic manifest, resume-safe)
-which also truncates lineage.
+Convergence test: the edge-set fingerprint (c = count, h = xor of
+xxhash64(u,v)) is stable across a round — two scalars observed on the
+round's one materializing job instead of a set-difference shuffle.
+Iteration control — resume, the per-round commit (manifest metrics c, h,
+iter_seconds), lineage truncation and the stop test — is the kernel's
+(iterate.py).
 
 Exchange budget (round 3 restructure; 16M/local[8]: 72.6s -> measured in
 BENCH). Because the pointer set is canonical (u > v strictly, all rounds),
@@ -33,15 +35,11 @@ Full-E exchanges per round: the large-star probe (E rows hashed on v), the
 small-star probe (E rows hashed on u), and the closing distinct (E rows on
 (u,v); kept — the fingerprint convergence test needs set semantics and it
 bounds duplicate growth). The two degree-style aggregates shuffle only
-~V rows each thanks to map-side partial min. The round-2 formulation
-exchanged 6E+ (symmetrize 2E for agg + E for probe, twice, plus distinct);
-round 0 previously ALSO paid an init `distinct()` and a separate full-E
-fingerprint action before the loop — both gone: raw canonicalized edges
-(duplicates and all) feed round 0 directly, the min-aggregates absorb
-duplicate rows, and the end-of-round distinct restores set semantics. The
-init fingerprint is unneeded: the first comparable fingerprint pair is
-(round 0, round 1), costing at most one extra (cheap, already-collapsed)
-round on inputs that were star-shaped to begin with.
+~V rows each thanks to map-side partial min. Raw canonicalized edges
+(duplicates and all) feed round 0 directly: the min-aggregates absorb
+duplicate rows and the end-of-round distinct restores set semantics, so
+no init distinct or init fingerprint pass runs — the first comparable
+fingerprint pair is (round 0, round 1).
 
 Skew: all aggregates are min() with map-side partial aggregation, so hot
 vertices cost one partial row per map task; the join fan-outs emit exactly
@@ -50,82 +48,41 @@ one row per input edge (never quadratic).
 Tail-round coalescing: after round 1 the pointer set collapses to ~V rows,
 but a fixed ``spark.sql.shuffle.partitions`` makes every tail round pay
 2x-cores tasks of near-empty data (pure scheduling overhead; per-pair tail
-efficiency 0.53-0.76 in round 3's protocol). The loop therefore re-derives
-the round's shuffle parallelism from the PREVIOUS round's observed row count
-(free — it rides the convergence Observation):
+efficiency 0.53-0.76 in round 3's protocol). Each round therefore
+re-derives its shuffle parallelism from the PREVIOUS round's observed row
+count (free — it rides the convergence Observation):
 ``p_round = clamp(ceil(rows / 128k), defaultParallelism, p0)``, applied by
 setting the session's shuffle-partitions conf for the round's plan and
 restoring it afterwards. With AQE on, coalescePartitions does this at
 runtime already; the protocol (and many production iterative jobs) runs
 AQE off, where this is the only mechanism.
+The conf stays because both alternatives measured slower on perfbench's
+117k-edge graph (4 cores, AQE on, 10 interleaved pairs): the session width
+with AQE coalescing +12 % per call, ``repartition(p_round, "v")`` +10 %.
 
-Tail-round FUSION (round 5; VERDICT r4 "what's wrong" #2): coalescing fixed
-the tail's task-count overhead but left its per-round FIXED cost — plan
-analysis + Observation + localCheckpoint/commit + distinct — which at 60M
-edges measured ~19s@local[8] vs ~47s@local[2] of mostly overhead (2.5x of
-the ideal 4x core scaling). Once the observed pointer count drops below
-``fuse_rows``, each trip through the loop runs TWO large/small-star rounds
-and materializes/observes/checkpoints ONLY the second — halving the fixed
-cost per logical round. The intermediate round output is columnar-persisted
-(consumed three times by the second round's aggregates+probe) and dropped
-after the pair's single action. Convergence detection is unchanged
-(fingerprint before-pair vs after-pair; a converged set is a fixed point of
-both stars, so a pair that straddles convergence costs at most one extra
-— cheap — fused pair). Resume checkpoints land every fused pair, at the
-index of the pair's second round, so commit indices stay monotonic.
-
-Driver-side union-find ENDGAME (round 5): fusion (below) turned out to be
-the wrong tool for the 60M-scale tail, so the tail is now ELIMINATED
-rather than amortized. Once a round's Observation reports the pointer set
-below ``endgame_rows`` (default 8M rows = ~128 MB of (long, long) — far
-inside the protocol's 8g driver), the loop stops shuffling: the pointer
-set is collected through Arrow, min-label propagation runs as vectorized
-numpy (edge relaxation with ``np.minimum.at`` + pointer-jumping full path
-compression per pass — each pass is O(E) gathers, passes are O(log
-diameter), and after one or two distributed star rounds the forest is
-already shallow), and the exact final star forest (u -> min id of
+Driver-side union-find ENDGAME (round 5): the collapsed tail is
+ELIMINATED rather than amortized. Once a round's Observation reports the
+pointer set below ``endgame_rows`` (default 8M rows = ~128 MB of (long,
+long) — far inside the protocol's 8g driver), the loop stops shuffling: the
+pointer set is collected through Arrow, min-label propagation runs as
+vectorized numpy (edge relaxation with ``np.minimum.at`` + pointer-jumping
+full path compression per pass — each pass is O(E) gathers, passes are
+O(log diameter), and after one or two distributed star rounds the forest
+is already shallow), and the exact final star forest (u -> min id of
 component, the unique fixed point the distributed loop would have reached)
-is parallelized back and committed. This is the standard hybrid endgame of
-scale-aware iterative systems (e.g. Spark's own treeAggregate-style
-driver-side finishes): the collapsed tail is SMALL DATA, and the fixed
-per-round cost of distributed execution (plan + Observation + checkpoint +
-distinct, measured ~19s @ local[8] per tail round at 60M) cannot beat a
-~2-4s single-pass local solve no matter how it is batched. Scaling
-consequence, measured at 60M (BENCH/BASELINE.md): the tail phase — whose
-per-pair 2->8 efficiency was 0.42-0.76, the binding drag on CC's total —
-becomes a parallelism-independent constant, so CC total efficiency tracks
-the well-scaling round-0 exchange phase. The threshold guards cluster
-scale: with V >> endgame_rows (say 10^10 vertices) the endgame never
-fires and the distributed tail runs exactly as before; raise
-``endgame_rows`` with driver memory, set 0 to disable.
-
-Driver-arena caveat (measured in this sandbox, scratch.py module
-docstring): the VM restores guest memory lazily at ~200us per
-first-touched page, so the endgame's driver-side numpy over a 6M-row set
-measured 55.7s in a COLD python process vs **1.45s** after
-``scalemine_spark.scratch.prime_driver_arena()`` pre-faults the scratch
-arena once (the python analogue of the JVM's -XX:+AlwaysPreTouch /
-database buffer-pool pre-fault). Long-lived drivers self-warm after the
-first solve; single-shot jobs that will hit the endgame should prime at
-startup (bench.py and tools/scaling_bench.py do).
-
-``fuse_rows`` default is 2M — deliberately SMALL, from a measured negative
-result. The hypothesis "the amortized fixed cost is size-independent, so
-fuse any post-collapse tail" was tested at 60M edges (V = 6M) and
-REGRESSED 3-5x: with fuse_rows=16M the fused pair ran 270s @ local[8]
-where the two unfused rounds cost ~49s; with fuse_rows=8M (fusing only the
-fully-collapsed ~6M-row tail) the fused pairs still ran 141s and 151s
-(disabling auto-broadcast changed nothing, ruling out a stats-driven join
-flip). The cause is cache pressure: a fused pair holds BOTH rounds'
-intermediates live at once (two large-star caches + the persisted
-mid-round output + the old and new committed states + the edge cache), and
-once that no longer fits comfortably beside the edge cache in executor
-memory the job goes GC/eviction-bound — the same row-cache GC pathology
-measured in round 3 (BENCH round notes), now triggered by fusion itself.
-Below ~2M rows the intermediates are trivially small, and fusion measured
-a real win (cold 2M-edge CC 29.4s -> 21.2s at 32 cores). On a real
-cluster the same rule applies relative to executor heap: fuse only when
-the pair's working set is far below storage memory.
+is parallelized back and committed with an ``endgame`` marker. This is the
+standard hybrid endgame of scale-aware iterative systems (e.g. Spark's own
+treeAggregate-style driver-side finishes): the collapsed tail is SMALL
+DATA, and the fixed per-round cost of distributed execution (plan +
+Observation + checkpoint + distinct, measured ~19s @ local[8] per tail
+round at 60M) cannot beat a ~2-4s single-pass local solve no matter how it
+is batched. Scaling consequence, measured at 60M (BENCH/BASELINE.md): the
+tail phase — whose per-pair 2->8 efficiency was 0.42-0.76, the binding
+drag on CC's total — becomes a parallelism-independent constant, so CC
+total efficiency tracks the well-scaling round-0 exchange phase. The
+threshold guards cluster scale: with V >> endgame_rows (say 10^10
+vertices) the endgame never fires and the distributed tail runs exactly as
+before; raise ``endgame_rows`` with driver memory, set 0 to disable.
 
 Shuffle codec: CC's round-0 exchange phase is bandwidth-bound, and zstd
 shuffle compression measured **-23% round-0 wall** at 60M/local[8] (commit
@@ -145,21 +102,22 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from scalemine_spark.checkpoint import CheckpointManager
+from scalemine_spark.iterate import iterate, resume
 
 
-def _fingerprint(e: DataFrame) -> tuple[int, int]:
-    """Set fingerprint of a (deduplicated) pointer-edge set. Only used on the
-    resume path; in the main loop the fingerprint rides the round's
-    Observation for free."""
+def _fingerprint(e: DataFrame) -> dict[str, int]:
+    """Set fingerprint {c: rows, h: xor hash} of a (deduplicated) pointer-edge
+    set. Only used on the resume path; in the main loop the fingerprint
+    rides the round's Observation for free."""
     row = e.agg(
         F.count("*").alias("c"),
         F.bit_xor(F.xxhash64("u", "v")).alias("h"),
     ).collect()[0]
-    return int(row["c"] or 0), int(row["h"] or 0)
+    return {"c": int(row["c"] or 0), "h": int(row["h"] or 0)}
 
 
 def _unionfind_numpy(u, v):
@@ -232,8 +190,7 @@ def _endgame_star_forest(e: DataFrame) -> tuple[DataFrame, int]:
     into ``createDataFrame`` out. The pandas detour was the dominant cost:
     at 6M rows ``toPandas()`` measured 9-13s PER CALL (recurring
     Arrow->pandas block conversion, not page faults) where ``toArrow()``
-    measures 0.32s; the ``to_numpy`` copies below land in the primed glibc
-    arena (scratch.py)."""
+    measures 0.32s."""
     import numpy as np
     import pyarrow as pa
 
@@ -277,7 +234,7 @@ def _cc_round(e: DataFrame) -> tuple[DataFrame, DataFrame]:
     # partition exactly once even with two consumers in one job, and no
     # extra eager job runs per round (A/B at 60M/local[8]: 102s stable vs
     # 113-180s — BENCH/BASELINE.md). Lineage truncation still happens at the
-    # round output (checkpoint commit / localCheckpoint of e2).
+    # round output (the kernel's commit or localCheckpoint).
     ls = ls.persist()
     # ---- small-star over the pointer set ------------------------------
     mins2 = ls.groupBy("u").agg(F.min("v").alias("m"))
@@ -293,18 +250,15 @@ def connected_components(
     max_rounds: int = 50,
     checkpointer: CheckpointManager | None = None,
     num_partitions: int | None = None,
-    fuse_rows: int = 1 << 21,
     endgame_rows: int = 1 << 23,
 ) -> tuple[DataFrame, dict]:
     """Returns (components DF (id, comp) with comp = min id of the component,
     info dict). Includes isolated endpoints of self-loops.
 
-    fuse_rows: pointer-set size below which two star-rounds run per
-    materialization (tail-round fusion — module docstring); 0 disables.
     endgame_rows: pointer-set size below which the remaining rounds are
-    replaced by the driver-side union-find endgame (module docstring);
-    checked before fusion; 0 disables. Size it to driver memory: rows *
-    16 bytes must fit comfortably (default 8M rows = ~128 MB)."""
+    replaced by the driver-side union-find endgame (module docstring); 0
+    disables. Size it to driver memory: rows * 16 bytes must fit
+    comfortably (default 8M rows = ~128 MB)."""
     spark = edges.sparkSession
     # scale-adaptive round-0 width and tail-coalescing cap (round 6, guide
     # §2) — same derivation and rationale as pagerank._prepare / tuning.py;
@@ -333,45 +287,32 @@ def connected_components(
         F.least("src", "dst").alias("v"),
     )
 
-    start_round = 0
-    fp: tuple[int, int] | None = None
-    resumed_rows: int | None = None
-    if checkpointer is not None:
-        last = checkpointer.latest()
-        if last is not None:
-            e = checkpointer.read_state(spark, last)
-            start_round = last + 1
-            fp = _fingerprint(e)  # committed state is deduped -> comparable
-            resumed_rows = fp[0]  # seed tail coalescing + fusion on resume
+    # a resumed set's fingerprint seeds the convergence test, the tail width
+    # and the endgame test (committed state is deduped -> comparable)
+    state, _, start = resume(checkpointer, spark, max_rounds)
+    fp = None
+    if state is not None:
+        e = state
+        fp = _fingerprint(e)
+
+    def small(s):
+        # the pointer set was OBSERVED small (a round's Observation or the
+        # resume fingerprint; the set is canonical u > v): solve locally
+        return s is not None and 0 < s["c"] < endgame_rows
 
     t0 = time.monotonic()
-    rounds = start_round
-    converged = False
-    round_secs: list[float] = []
-    n_pointer_edges = resumed_rows or 0
-    # tail-round coalescing (module docstring): round 0 runs at the session
-    # parallelism p; each later round's shuffle width is re-derived from the
-    # previous round's observed pointer count, floored at defaultParallelism
-    # (keep every core busy) and capped at p (never widen past the session).
-    # The width is applied through the session shuffle-partitions conf
-    # (restored in the finally) — NOTE this is session-global while the loop
-    # runs: a concurrent query planned on the same SparkSession during a
-    # tail round would see the narrowed width. The engine's jobs run one
-    # algorithm per session (cli/bench/protocol all do); a shared-session
-    # service should hand CC its own session.
+    # tail-round coalescing (module docstring): round 0 runs at p, each later
+    # round at the previous round's observed pointer count / 128k, clamped to
+    # [defaultParallelism, p]. The conf is session-global until the finally
+    # restores it: a query planned concurrently on this session would see
+    # the narrowed width, so the engine runs one algorithm per session.
     rows_per_partition = 1 << 17
     dp = max(1, spark.sparkContext.defaultParallelism)
     sp_key = "spark.sql.shuffle.partitions"
     sp_saved = spark.conf.get(sp_key)
-    p_round = p
-    if resumed_rows is not None:
-        # the resume fingerprint already counted the pointer set — a resumed
-        # tail round coalesces immediately instead of paying full width once
-        p_round = min(p, max(dp, -(-resumed_rows // rows_per_partition)))
-    # the narrowed conf is session-global while the loop runs (round-4
-    # advisory): if another job is ALREADY active on this session when CC
-    # starts, its plans could pick up our per-round width — warn instead of
-    # relying on the one-algorithm-per-session comment alone.
+    # if another job is ALREADY active on this session when CC starts, its
+    # plans could pick up our per-round width — warn instead of relying on
+    # the one-algorithm-per-session comment alone (round-4 advisory)
     if spark.sparkContext.statusTracker().getActiveJobsIds():
         import warnings
 
@@ -384,84 +325,57 @@ def connected_components(
             RuntimeWarning,
             stacklevel=2,
         )
-    n_fused = 0
-    endgame_secs: float | None = None
+    ls_caches: list[DataFrame] = []  # the live large-star cache
+
+    def step(e, it, prev):
+        p_round = p if prev is None else min(p, max(dp, -(-prev["c"] // rows_per_partition)))
+        spark.conf.set(sp_key, str(p_round))
+        # the previous round's cache served its job and is no longer read
+        if ls_caches:
+            ls_caches.pop().unpersist()
+        out, ls = _cc_round(e)
+        ls_caches.append(ls)
+        # the convergence fingerprint rides the materializing action
+        return out, {"c": F.count(F.lit(1)), "h": F.bit_xor(F.xxhash64("u", "v"))}
+
     try:
-        r = start_round
-        while r < max_rounds:
-            t_r = time.monotonic()
-            # driver-side union-find endgame (module docstring): the pointer
-            # set has been OBSERVED small (fp is not None -> the count comes
-            # from a real round's Observation or the resume fingerprint, and
-            # the set is canonical u > v) — stop shuffling, solve locally,
-            # commit the exact final star forest.
-            if fp is not None and 0 < n_pointer_edges < endgame_rows:
-                e2, n_pointer_edges = _endgame_star_forest(e)
-                if checkpointer is not None:
-                    e2 = checkpointer.commit(
-                        r, e2, {"round_seconds": time.monotonic() - t_r,
-                                "endgame": True}
-                    )
-                e = e2
-                rounds = r + 1
-                converged = True
-                endgame_secs = time.monotonic() - t_r
-                round_secs.append(endgame_secs)
-                break
-            spark.conf.set(sp_key, str(p_round))
-            # tail-round fusion (module docstring): pointer set observed
-            # small -> run two star-rounds, pay ONE materialization
-            fuse = (
-                fp is not None
-                and 0 < n_pointer_edges < fuse_rows
-                and r + 1 < max_rounds
-            )
-            mid_caches = []
-            e_in = e
-            if fuse:
-                e_mid, ls_mid = _cc_round(e_in)
-                # the second round consumes e_mid three times (two V-sized
-                # aggregates + the probe join) — columnar persist, same
-                # rationale as the ls handle inside _cc_round
-                e_mid = e_mid.persist()
-                mid_caches = [ls_mid, e_mid]
-                e_in = e_mid
-            e2, ls_cache = _cc_round(e_in)
-            # convergence fingerprint rides the materializing action
-            r_commit = r + 1 if fuse else r
-            obs = Observation(f"cc_fp_{r_commit}")
-            e2 = e2.observe(
-                obs,
-                F.count(F.lit(1)).alias("c"),
-                F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-            )
-            if checkpointer is not None:
-                e2 = checkpointer.commit(
-                    r_commit, e2, {"round_seconds": time.monotonic() - t_r}
-                )
-            else:
-                # truncate every round: branching ~4/round (SURVEY §4.3.1)
-                e2 = e2.localCheckpoint(eager=True)
-            got = obs.get
-            ls_cache.unpersist()
-            for h in mid_caches:
-                h.unpersist()
-            fp2 = (int(got["c"] or 0), int(got["h"] or 0))
-            e = e2
-            rounds = r_commit + 1
-            n_fused += 1 if fuse else 0
-            n_pointer_edges = fp2[0]
-            round_secs.append(time.monotonic() - t_r)
-            if fp is not None and fp2 == fp:
-                converged = True
-                break
-            fp = fp2
-            p_round = min(p, max(dp, -(-n_pointer_edges // rows_per_partition)))
-            r = rounds
+        loop = iterate(
+            step,
+            e,
+            start,
+            start if small(fp) else max_rounds,  # a small resumed set goes straight to the endgame
+            name="cc_fp",
+            checkpointer=checkpointer,
+            scalars=fp,
+            until=lambda s, prev: s == prev or small(s),
+        )
     finally:
         spark.conf.set(sp_key, sp_saved)
-    if checkpointer is not None:
-        checkpointer.flush()
+        for ls in ls_caches:
+            ls.unpersist()
+    e = loop.state
+    fps = ([fp] if fp is not None else []) + loop.scalars
+    converged = len(fps) >= 2 and fps[-1] == fps[-2]
+    last = fps[-1] if fps else None
+    rounds = start + len(loop.scalars)
+    n_pointer_edges = last["c"] if last else 0
+    round_secs = list(loop.iter_seconds)
+
+    # driver-side union-find endgame (module docstring): stop shuffling,
+    # solve locally, commit the exact final star forest
+    endgame_secs: float | None = None
+    if not converged and rounds < max_rounds and small(last):
+        t_r = time.monotonic()
+        e, n_pointer_edges = _endgame_star_forest(e)
+        if checkpointer is not None:
+            e = checkpointer.commit(
+                rounds, e, {"iter_seconds": time.monotonic() - t_r, "endgame": True}
+            )
+            checkpointer.flush()
+        endgame_secs = time.monotonic() - t_r
+        round_secs.append(endgame_secs)
+        rounds += 1
+        converged = True
 
     comps = (
         verts.join(e.select(F.col("u").alias("id"), F.col("v").alias("root")), "id", "left")
@@ -473,7 +387,6 @@ def connected_components(
         "seconds": time.monotonic() - t0,
         "round_seconds": round_secs,
         "n_pointer_edges": n_pointer_edges,
-        "n_fused_pairs": n_fused,
         "endgame_seconds": endgame_secs,  # None = endgame never fired
     }
     verts.unpersist()

@@ -95,12 +95,7 @@ def hits(
         .persist()
     )
 
-    state, manifest, start = resume(checkpointer, spark)
-    if start > iters:
-        # the store ran past `iters`: answer from iteration iters-1, with
-        # that iteration's own L1 sums (the latest ones would mis-normalize)
-        state = checkpointer.read_state(spark, iters - 1)
-        manifest = checkpointer.read_manifest(iters - 1)
+    state, manifest, start = resume(checkpointer, spark, iters)
     a_mats: list[DataFrame] = []  # the live auth half-step cache
 
     def step(state, it, prev):

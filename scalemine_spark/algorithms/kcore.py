@@ -77,7 +77,7 @@ def kcore(
             .agg(F.count("*").alias("core_deg"))
         )
 
-    alive, manifest, start = resume(checkpointer, spark)  # (id, core_deg)
+    alive, manifest, start = resume(checkpointer, spark, max_peels)  # (id, core_deg)
 
     def step(alive, it, prev):
         return degrees(alive).filter(F.col("core_deg") >= k), {"n": F.count(F.lit(1))}

@@ -69,7 +69,8 @@ def label_propagation(
         .persist()
     )
 
-    labels, _, start = resume(checkpointer, spark)
+    stop = iters if iters is not None else max_iters
+    labels, _, start = resume(checkpointer, spark, stop)
     if labels is None:
         labels = verts.select("id", F.col("id").alias("label"))
 
@@ -106,7 +107,7 @@ def label_propagation(
         step,
         labels,
         start,
-        iters if iters is not None else max_iters,
+        stop,
         name="lpa_changed",
         checkpointer=checkpointer,
         until=None if iters is not None else (lambda s, _: s["changed"] == 0),

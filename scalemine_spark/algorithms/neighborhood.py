@@ -43,7 +43,7 @@ from __future__ import annotations
 import math
 import time
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from scalemine_spark.checkpoint import CheckpointManager
@@ -72,7 +72,8 @@ def neighborhood_function(
     pair (N(t) saturated).
 
     Exactness: reach-set growth is join/distinct/anti-join on BIGINT pairs
-    — no floats anywhere; replay-identical under any partitioning.
+    — no floats anywhere; replay-identical under any partitioning. Each t
+    is one kernel iteration (iterate.py); t = 0 materializes the self-pairs.
     """
     spark = edges.sparkSession
     # scale-adaptive loop width (round 6, guide §2) — same derivation and
@@ -86,17 +87,9 @@ def neighborhood_function(
     )
     verts = _verts(e, p)
 
-    # the t=0 pair count (=|V|) rides the seeding checkpoint as an
-    # Observation — no separate count() job (the G1/G2/G7 rule, round 6)
-    obs0 = Observation("nf_0")
-    reach = (
-        verts.select(F.col("id").alias("root"), "id")
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    counts = [int(obs0.get["n"] or 0)]
-    t0 = time.monotonic()
-    for _t in range(1, max_t + 1):
+    def step(reach, t, prev):
+        if reach is None:  # t = 0: the self-pairs, N(0) = |V|
+            return verts.select(F.col("id").alias("root"), "id"), {"n": F.count(F.lit(1))}
         grown = (
             reach.withColumnRenamed("id", "src")
             .join(e, "src")
@@ -104,17 +97,19 @@ def neighborhood_function(
             .distinct()
             .join(reach, ["root", "id"], "left_anti")
         )
-        obs = Observation(f"nf_{_t}")
-        reach = (
-            reach.union(grown.select("root", "id"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        n = int(obs.get["n"])
-        counts.append(n)
-        if n == counts[-2]:
-            counts.extend([n] * (max_t - _t))  # saturated: N(t) is flat
-            break
+        return reach.union(grown.select("root", "id")), {"n": F.count(F.lit(1))}
+
+    t0 = time.monotonic()
+    loop = iterate(
+        step,
+        None,
+        0,
+        max_t + 1,
+        name="nf",
+        until=lambda s, prev: prev is not None and s["n"] == prev["n"],
+    )
+    counts = [s["n"] for s in loop.scalars]
+    counts.extend(counts[-1:] * (max_t + 1 - len(counts)))  # saturated: N(t) is flat
     out = spark.createDataFrame(
         [(t, c) for t, c in enumerate(counts)], "t long, n_pairs long"
     )
@@ -221,7 +216,7 @@ def hyperball(
     )
     verts = _verts(e, p)
 
-    state, _, start = resume(checkpointer, spark)
+    state, _, start = resume(checkpointer, spark, max_t + 1)
     if state is not None:
         # resuming with a different m would silently apply _estimate(m)
         # to wrong-width registers (round-5 advisory): validate the

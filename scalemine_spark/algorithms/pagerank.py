@@ -163,7 +163,8 @@ def pagerank(
     if n == 0:
         return verts.select("id", F.lit(0.0).alias("rank")), {"iters": 0, "n": 0}
 
-    state, _, start_iter = resume(checkpointer, spark)  # (id, out_deg, rank)
+    total_iters = fixed_iters if fixed_iters is not None else max_iters
+    state, _, start_iter = resume(checkpointer, spark, total_iters)  # (id, out_deg, rank)
     if state is None:
         state = verts.withColumn("rank", F.lit(1.0 / n))
 
@@ -233,7 +234,6 @@ def pagerank(
             e.unpersist()
             hubs = (hub_ids, e_hub, e_tail)
 
-    total_iters = fixed_iters if fixed_iters is not None else max_iters
     t0 = time.monotonic()
 
     # one-time scalar pass; thereafter dangling/total come from the fused

@@ -76,7 +76,8 @@ def personalized_pagerank(
         raise ValueError("none of the seeds exist in the graph")
     tele = F.when(is_seed, F.lit(1.0 / n_seed)).otherwise(F.lit(0.0))
 
-    state, manifest, start_iter = resume(checkpointer, spark)  # (id, out_deg, rank)
+    stop = fixed_iters if fixed_iters is not None else max_iters
+    state, manifest, start_iter = resume(checkpointer, spark, stop)  # (id, out_deg, rank)
     if state is None:
         state = verts.select("id", "out_deg", tele.alias("rank")).localCheckpoint(
             eager=True
@@ -113,7 +114,7 @@ def personalized_pagerank(
         step,
         state,
         start_iter,
-        fixed_iters if fixed_iters is not None else max_iters,
+        stop,
         name="ppr_stats",
         checkpointer=checkpointer,
         scalars={"dm": dangling},

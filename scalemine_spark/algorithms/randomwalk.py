@@ -31,18 +31,21 @@ shuffles per step; the E-sized side is never re-exchanged or re-sorted
 (first cut cached on src alone and measured 1.8x slower at 60M/local[32]
 from the per-step E re-shuffle — BENCH/new_algos_r5.json). Frontier size
 is monotonically non-increasing (walks die at dead ends, never branch),
-and steps are short (length ~ 10-80 for embedding corpora); lineage is
-truncated per step.
+and steps are short (length ~ 10-80 for embedding corpora); each step is
+one kernel iteration (iterate.py), which truncates lineage and observes
+the frontier size on the step's one job.
 """
 
 from __future__ import annotations
 
 import time
 from collections.abc import Sequence
+from functools import reduce
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from scalemine_spark.iterate import iterate
 from scalemine_spark.tuning import adaptive_partitions
 
 _MIX_P = 1000003  # bounds the id terms so the mix never overflows BIGINT
@@ -114,14 +117,15 @@ def random_walks(
         "seed", "walk", F.col("seed").alias("cur")
     ).localCheckpoint(eager=True)
 
-    out = [
-        frontier.select(
-            "seed", "walk", F.lit(0).alias("step"), F.col("cur").alias("vertex")
+    out = []  # the corpus: every materialized frontier, tagged with its step
+
+    def at_step(frontier, t):
+        return frontier.select(
+            "seed", "walk", F.lit(t).alias("step"), F.col("cur").alias("vertex")
         )
-    ]
-    frontier_sizes = []
-    t0 = time.monotonic()
-    for t in range(length):
+
+    def step(frontier, t, prev):
+        out.append(at_step(frontier, t))
         # phase 1: chosen rank from the walker's own state + outdeg only
         # (broadcast-sized frontier ⋈ odeg on src — no neighbor fan-out)
         stepped = frontier.join(
@@ -140,32 +144,15 @@ def random_walks(
                 F.col("src").alias("cur"), "rnk", F.col("dst").alias("vertex")
             ),
             ["cur", "rnk"],
-        ).select("seed", "walk", "vertex")
-        # frontier size rides the materializing localCheckpoint as an
-        # Observation — ONE Spark job per step instead of checkpoint+count
-        # (the G1/G2/G7 rule; round-5 verdict "what's wrong" #3)
-        obs = Observation(f"walk_n_{t}")
-        frontier = (
-            nxt.select("seed", "walk", F.col("vertex").alias("cur"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        n = int(obs.get["n"] or 0)
-        frontier_sizes.append(n)
-        out.append(
-            frontier.select(
-                "seed",
-                "walk",
-                F.lit(t + 1).alias("step"),
-                F.col("cur").alias("vertex"),
-            )
-        )
-        if n == 0:
-            break
+        ).select("seed", "walk", F.col("vertex").alias("cur"))
+        return nxt, {"n": F.count(F.lit(1))}
 
-    corpus = out[0]
-    for o in out[1:]:
-        corpus = corpus.unionAll(o)
+    t0 = time.monotonic()
+    loop = iterate(step, frontier, 0, length, name="walk_n", until=lambda s, _: s["n"] == 0)
+    out.append(at_step(loop.state, len(loop.scalars)))
+
+    corpus = reduce(lambda a, b: a.unionAll(b), out)
+    frontier_sizes = [s["n"] for s in loop.scalars]
     info = {
         "steps_run": len(frontier_sizes),
         "frontier_sizes": frontier_sizes,

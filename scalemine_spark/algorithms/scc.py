@@ -30,9 +30,11 @@ reuse the cached ordering, the G1/G6 edge-cache rule) plus one partial-agg
 MAX and a V-sized merge; the backward phase is frontier-driven so only
 newly reached vertices expand (each SCC member is expanded exactly once).
 On web graphs the giant CORE has one root, so most mass resolves in outer
-round 1; outer rounds shrink the vertex set monotonically. Lineage is
-truncated every inner iteration; the committed state per outer round is
-the accumulated (id, scc) table, so resume skips completed outer rounds.
+round 1; outer rounds shrink the vertex set monotonically. Each inner
+loop is one kernel call (iterate.py: one job per iteration, lineage
+truncated, the changed/reached count observed, stop at zero); the
+committed state per outer round is the accumulated (id, scc) table, so
+resume skips completed outer rounds.
 """
 
 from __future__ import annotations
@@ -43,7 +45,12 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from scalemine_spark.checkpoint import CheckpointManager
+from scalemine_spark.iterate import iterate, resume
 from scalemine_spark.tuning import adaptive_partitions
+
+
+def _drained(s, prev):  # an inner loop's fixpoint: nothing changed or reached
+    return s["n"] == 0
 
 
 def scc(
@@ -73,13 +80,7 @@ def scc(
         .persist()
     )
 
-    start = 0
-    done: DataFrame | None = None  # accumulated (id, scc)
-    if checkpointer is not None:
-        last = checkpointer.latest()
-        if last is not None:
-            done = checkpointer.read_state(spark, last)
-            start = last + 1
+    done, _, start = resume(checkpointer, spark, max_outer)  # accumulated (id, scc)
 
     remaining = verts
     if done is not None:
@@ -115,11 +116,7 @@ def scc(
         )
 
         # --- phase 1: forward max-color propagation to fixpoint ---
-        color = remaining.select("id", F.col("id").alias("color")).localCheckpoint(
-            eager=True
-        )
-        k_color = 0
-        for it in range(max_inner):
+        def color_step(color, it, prev):
             cand = (
                 e.join(color.select(F.col("id").alias("src"), "color"), "src")
                 .groupBy(F.col("dst").alias("id"))
@@ -130,24 +127,29 @@ def scc(
                 F.greatest("color", "cand").alias("color"),
                 (F.col("cand") > F.col("color")).alias("chg"),
             )
-            obs = Observation(f"scc_color_{outer}_{it}")
-            merged = merged.observe(
-                obs, F.sum(F.col("chg").cast("long")).alias("n")
-            )
-            color = merged.select("id", "color").localCheckpoint(eager=True)
-            k_color = it + 1
-            if int(obs.get["n"] or 0) == 0:
-                break
+            return merged, {"n": F.sum(F.col("chg").cast("long"))}, ["id", "color"]
+
+        color = remaining.select("id", F.col("id").alias("color")).localCheckpoint(
+            eager=True
+        )
+        loop = iterate(
+            color_step, color, 0, max_inner, name=f"scc_color_{outer}", until=_drained
+        )
+        color, k_color = loop.state, len(loop.scalars)
 
         # --- phase 2: multi-root backward reach within color classes ---
         # frontier rows are (id, scc=root); expansion: forward edge u->v
-        # with v in the frontier reaches u, kept only if color(u) == root
+        # with v in the frontier reaches u, kept only if color(u) == root.
+        # `reached` stays a lazy union of the checkpointed frontiers (round-5
+        # verdict #3: re-checkpointing it copied O(|SCC|) rows per step)
         reached = color.filter(F.col("id") == F.col("color")).select(
             "id", F.col("id").alias("scc")
         ).localCheckpoint(eager=True)
-        frontier = reached
-        k_reach = 0
-        for it in range(max_inner):
+
+        def reach_step(frontier, it, prev):
+            nonlocal reached
+            if it:  # the last step's frontier, materialized and non-empty
+                reached = reached.unionAll(frontier)
             preds = (
                 e_by_dst.join(
                     frontier.select(F.col("id").alias("dst"), "scc"), "dst"
@@ -161,20 +163,14 @@ def scc(
                 .select("id", "scc")
                 .join(reached.select("id"), "id", "left_anti")
             )
-            # frontier size rides the materializing localCheckpoint as an
-            # Observation (one job per inner step); `reached` stays a lazy
-            # union of the already-checkpointed frontiers — re-checkpointing
-            # the whole union each step copied O(|SCC|) cached rows per
-            # iteration for no new information (round-5 verdict #3)
-            obs_f = Observation(f"scc_reach_{outer}_{it}")
-            frontier = (
-                new.observe(obs_f, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint(eager=True)
-            )
-            k_reach = it + 1
-            if int(obs_f.get["n"] or 0) == 0:
-                break
-            reached = reached.unionAll(frontier)
+            return new, {"n": F.count(F.lit(1))}
+
+        loop = iterate(
+            reach_step, reached, 0, max_inner, name=f"scc_reach_{outer}", until=_drained
+        )
+        k_reach = len(loop.scalars)
+        if k_reach and not loop.stopped:  # the bound cut the reach: keep its last frontier
+            reached = reached.unionAll(loop.state)
         inner_iters.append((k_color, k_reach))
 
         done = reached if done is None else done.unionAll(reached)

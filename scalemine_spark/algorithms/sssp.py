@@ -112,7 +112,7 @@ def _relax(edges, weight, sources, max_rounds, checkpointer, num_partitions, met
         .distinct()
     )
 
-    state, _, start = resume(checkpointer, spark)  # (id, dist, improved)
+    state, _, start = resume(checkpointer, spark, max_rounds + 1)  # (id, dist, improved)
     if state is None:
         seeds = verts.filter(F.col("id").isin(list(sources))).select(
             "id",

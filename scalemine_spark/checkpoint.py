@@ -215,9 +215,15 @@ class CheckpointManager:
     # -- resume ------------------------------------------------------------
     def latest(self) -> int | None:
         """Max committed iteration (valid manifest + data present), else None."""
+        return self.latest_below(None)
+
+    def latest_below(self, stop: int | None) -> int | None:
+        """Max committed iteration below `stop` (any when None), else None."""
         self.flush()
         best = None
         for it, versions in self._versions().items():
+            if stop is not None and it >= stop:
+                continue
             # any complete version proves the commit; prefer the newest,
             # fall back past a torn amend to an older complete one
             for v in reversed(versions):

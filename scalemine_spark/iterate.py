@@ -1,7 +1,9 @@
-"""One iteration kernel for the vertex-centric loops (pagerank, ppr, hits,
-labelprop, sssp and bfs, kcore, hyperball) [BASELINE.json:14]. An algorithm
-supplies its preparation, a step and its output projection; iteration
-control and checkpointing live here (Pregelix's one plan template).
+"""One iteration kernel for every iterative loop in the engine
+[BASELINE.json:14]: pagerank, ppr, hits, labelprop, sssp and bfs, kcore,
+hyperball, the neighborhood function, random walks, connected components'
+star rounds and scc's color and reach loops. An algorithm supplies its
+preparation, a step and its output projection; iteration control and
+checkpointing live here (Pregelix's one plan template).
 
 A step is `step(state, it, prev) -> (frame, {name: Column}[, keep])`: the
 lazy next state, aggregates observed on it, and optionally the columns to
@@ -37,10 +39,16 @@ class Loop(NamedTuple):
     stopped: bool  # `until` ended the loop
 
 
-def resume(checkpointer: CheckpointManager | None, spark: SparkSession):
-    """(state, manifest, next iteration) of the latest committed iteration;
-    (None, None, 0) without a checkpointer or a committed iteration."""
+def resume(
+    checkpointer: CheckpointManager | None, spark: SparkSession, stop: int | None = None
+):
+    """(state, manifest, next iteration) of the latest committed iteration
+    below `stop`, the call's own iteration count (None: any) — a store that
+    ran further answers from the call's last iteration, never from a later
+    one; (None, None, 0) without a checkpointer or such an iteration."""
     last = checkpointer.latest() if checkpointer is not None else None
+    if last is not None and stop is not None and last >= stop:
+        last = checkpointer.latest_below(stop)
     if last is None:
         return None, None, 0
     return checkpointer.read_state(spark, last), checkpointer.read_manifest(last), last + 1

@@ -1,6 +1,7 @@
 """The iteration kernel (scalemine_spark/iterate.py) and the loops built on
 it: commit-then-amend order, the stop test, HITS resume and argument
-checks, LPA crash-resume, and one Spark job per iteration."""
+checks, LPA crash-resume, resume bounded by the call's iteration count,
+and one Spark job per iteration."""
 
 import os
 
@@ -9,11 +10,14 @@ from pyspark.sql import functions as F
 
 from scalemine_spark import fixtures as FX
 from scalemine_spark.algorithms import (
+    connected_components,
     hits,
     hyperball,
     label_propagation,
+    neighborhood_function,
     pagerank,
     personalized_pagerank,
+    random_walks,
 )
 from scalemine_spark.checkpoint import CheckpointManager
 from scalemine_spark.iterate import iterate, resume
@@ -127,13 +131,42 @@ def test_lpa_resume(spark, tmp_path):
     assert sorted((r["id"], r["label"]) for r in l2.collect()) == ref
 
 
+_CHAIN = [(i, i + 1) for i in range(1000)]  # CC needs ~log2(1000) rounds
+
 _RUNS = {
-    "pagerank": lambda e, k: pagerank(e, fixed_iters=k),
-    "ppr": lambda e, k: personalized_pagerank(e, [0, 1], fixed_iters=k),
-    "hits": lambda e, k: hits(e, iters=k),
-    "labelprop": lambda e, k: label_propagation(e, iters=k),
+    "pagerank": lambda e, k, **kw: pagerank(e, fixed_iters=k, **kw),
+    "ppr": lambda e, k, **kw: personalized_pagerank(e, [0, 1], fixed_iters=k, **kw),
+    "hits": lambda e, k, **kw: hits(e, iters=k, **kw),
+    "labelprop": lambda e, k, **kw: label_propagation(e, iters=k, **kw),
     "hyperball": lambda e, k: hyperball(e, max_t=k),
+    # endgame_rows=0: the distributed rounds are what the count is about
+    "components": lambda e, k: connected_components(e, max_rounds=k, endgame_rows=0),
+    "random_walks": lambda e, k: random_walks(e, [0, 1, 2], length=k),
+    "neighborhood": lambda e, k: neighborhood_function(e, max_t=k),
 }
+# graphs on which iteration k+1 still does work: CC does not converge and
+# N(t) does not saturate within 3 steps of a long directed chain
+_GRAPHS = {"components": _CHAIN, "neighborhood": _CHAIN}
+
+
+@pytest.mark.parametrize("algo", ["hits", "labelprop", "pagerank", "ppr"])
+def test_resume_stops_at_the_calls_last_iteration(spark, tmp_path, algo):
+    """A store that ran 5 iterations answers a 3-iteration call from its
+    iteration 2, exactly as a fresh 3-iteration run does — not from the
+    store's later state."""
+    e = edges_df(spark, FX.g_karate_like())
+    _RUNS[algo](e, 5, checkpointer=CheckpointManager(str(tmp_path), "r", algo))
+    got, _ = _RUNS[algo](e, 3, checkpointer=CheckpointManager(str(tmp_path), "r", algo))
+    ref, _ = _RUNS[algo](e, 3)
+
+    def rows(df):
+        return {r["id"]: [v for k, v in r.asDict().items() if k != "id"] for r in df.collect()}
+
+    g, w = rows(got), rows(ref)
+    assert g.keys() == w.keys()
+    for k in w:
+        for a, b in zip(g[k], w[k]):
+            assert abs(a - b) <= 1e-12 * max(1.0, abs(b)), (k, g[k], w[k])
 
 
 @pytest.mark.parametrize("algo", sorted(_RUNS))
@@ -142,7 +175,7 @@ def test_one_spark_job_per_iteration(spark, algo):
     map-stage jobs and broadcast-collect jobs are switched off for the
     count: with them on, one action shows up as a timing-dependent number
     of job ids; with them off, a job is an action."""
-    e = edges_df(spark, FX.g_karate_like())
+    e = edges_df(spark, _GRAPHS.get(algo, FX.g_karate_like()))
     sc = spark.sparkContext
     keys = ("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
     saved = {k: spark.conf.get(k) for k in keys}

@@ -1,6 +1,6 @@
-"""Round-5 regression tests: CC tail-round fusion, k-means codebook
-operator (d12), asof auto-dispatch (j9c), streaming edge extraction (t7),
-pagerank hub_reason reporting."""
+"""Round-5 regression tests: CC distributed-round resume and driver-side
+endgame, k-means codebook operator (d12), asof auto-dispatch (j9c),
+streaming edge extraction (t7), pagerank hub_reason reporting."""
 
 import warnings
 
@@ -13,7 +13,7 @@ from tests.test_round4 import _clustered_emb
 
 
 # ---------------------------------------------------------------------------
-# g2 — CC tail-round fusion
+# g2 — CC distributed rounds
 # ---------------------------------------------------------------------------
 
 
@@ -21,26 +21,9 @@ def _cc_labels(comps):
     return {r["id"]: r["comp"] for r in comps.collect()}
 
 
-def test_cc_fusion_exact_and_fewer_materializations(spark):
-    """A long chain forces many tail rounds; fusion must (a) keep labels
-    exactly equal to the unfused run and (b) cut the number of
-    materializations (round_seconds entries) roughly in half past round 1."""
-    from scalemine_spark.algorithms import connected_components
-
-    pairs = [(i, i + 1) for i in range(0, 800)] + [(2000 + i, 2000 + i + 2) for i in range(0, 60, 2)]
-    e = edges_df(spark, pairs)
-    # endgame_rows=0: fusion is the tail path under test here (the endgame
-    # would otherwise absorb the tail on any graph this small)
-    c_off, i_off = connected_components(e, fuse_rows=0, endgame_rows=0)
-    c_on, i_on = connected_components(e, endgame_rows=0)
-    assert _cc_labels(c_off) == _cc_labels(c_on)
-    assert i_on["n_fused_pairs"] > 0
-    assert len(i_on["round_seconds"]) < len(i_off["round_seconds"])
-
-
-def test_cc_fusion_checkpoint_resume(spark, tmp_path):
-    """Fused pairs commit at the pair's second round index; a resumed run
-    must converge to identical labels and start from the committed state."""
+def test_cc_distributed_rounds_checkpoint_resume(spark, tmp_path):
+    """Every distributed star round commits; a resumed run must converge to
+    identical labels and start from the committed state."""
     from scalemine_spark.algorithms import connected_components
     from scalemine_spark.checkpoint import CheckpointManager
 
@@ -49,7 +32,6 @@ def test_cc_fusion_checkpoint_resume(spark, tmp_path):
     ck = CheckpointManager(str(tmp_path), "r5", "cc")
     comps, info = connected_components(e, checkpointer=ck, endgame_rows=0)
     ref = _cc_labels(comps)
-    assert info["n_fused_pairs"] > 0
 
     ck2 = CheckpointManager(str(tmp_path), "r5", "cc")
     comps2, info2 = connected_components(e, checkpointer=ck2, endgame_rows=0)

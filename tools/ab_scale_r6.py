@@ -28,13 +28,11 @@ def main():
 
     from scalemine_spark.algorithms import hits, label_propagation, pagerank
     from scalemine_spark.fixtures import synth_edges_distributed
-    from scalemine_spark.scratch import prime_driver_arena
     from scalemine_spark.session import get_spark
     from scalemine_spark.tuning import adaptive_partitions
 
     spark = get_spark("ab-scale-r6", cores=CPUS, shuffle_partitions=2 * CPUS)
     spark.sparkContext.setLogLevel("ERROR")
-    prime_driver_arena()
     edges = synth_edges_distributed(spark, n_edges, n_edges // 10, seed=42).persist()
     real_edges = edges.count()
     print(json.dumps({"n_edges": real_edges,

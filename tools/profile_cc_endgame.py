@@ -2,8 +2,8 @@
 
 The round-5 scaling protocol measured cc_endgame_seconds of 35-118s at
 60M edges while the 6M-row microbenchmark measured 2.6s. This script runs
-the SAME job as tools/scaling_bench.py (cold conf, zstd codec, primed
-arena) but instruments _endgame_star_forest phase by phase:
+the SAME job as tools/scaling_bench.py (cold conf, zstd codec) but
+instruments _endgame_star_forest phase by phase:
 collect (toArrow), numpy union-find, Arrow->DataFrame, and reports the
 observed pointer-set size the endgame actually received.
 
@@ -32,7 +32,6 @@ def main():
     from scalemine_spark.session import get_spark
     from pyspark.sql import functions as F
     from scalemine_spark.algorithms import components as C
-    from scalemine_spark.scratch import prime_driver_arena
 
     spark = get_spark(
         "profile_endgame", cores=args.cores, shuffle_partitions=2 * args.cores,
@@ -40,7 +39,6 @@ def main():
                     "spark.io.compression.codec": "zstd"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    print("prime arena: %.1fs" % prime_driver_arena(), file=sys.stderr)
 
     edges = spark.read.parquet(args.edges).repartition(2 * args.cores, "src").persist()
     n_edges = edges.count()

@@ -39,7 +39,6 @@ def ensure_edges(spark):
 def main():
     variants = sys.argv[1:] or ["base"]
     from scalemine_spark.algorithms import pagerank
-    from scalemine_spark.scratch import prime_driver_arena
     from scalemine_spark.session import get_spark
 
     out = {}
@@ -51,7 +50,6 @@ def main():
         spark = get_spark(f"profile-iter-{v}-{i}", cores=CPUS,
                           shuffle_partitions=2 * CPUS, extra_conf=extra)
         spark.sparkContext.setLogLevel("ERROR")
-        prime_driver_arena()
         ensure_edges(spark)
         e = spark.read.parquet(EDGES)
         np = None

@@ -106,12 +106,10 @@ def run_variant(spark, edges, variant):
 
 def main():
     variants = sys.argv[1:] or ["lck", "chain", "lck", "chain"]
-    from scalemine_spark.scratch import prime_driver_arena
     from scalemine_spark.session import get_spark
 
     spark = get_spark("proto-chain", cores=CPUS, shuffle_partitions=2 * CPUS)
     spark.sparkContext.setLogLevel("ERROR")
-    prime_driver_arena()
     from tools.profile_iter_r6 import EDGES, ensure_edges
 
     ensure_edges(spark)

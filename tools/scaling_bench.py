@@ -49,17 +49,6 @@ spark.sparkContext.setLogLevel("ERROR")
 edges = spark.read.parquet({edges_path!r}).repartition(2 * cores, "src").persist()
 n_edges = edges.count()
 
-if not {skip_cc}:
-    # CC's union-find endgame does large driver-side numpy/Arrow work; in
-    # this sandbox's lazily-restored VM the first touch of each fresh page
-    # costs ~200us, so pre-fault the driver arena ONCE at setup (the
-    # python analogue of -XX:+AlwaysPreTouch — scratch.py module
-    # docstring) instead of letting one-time sandbox page faults land
-    # inside the timed window.
-    from scalemine_spark.scratch import prime_driver_arena
-    t_prime = prime_driver_arena()
-    print("primed driver arena in %.1fs" % t_prime, file=sys.stderr)
-
 out = {{"n_edges": n_edges}}
 if not {skip_pr}:
     t0 = time.monotonic()
