@@ -1,4 +1,4 @@
-.PHONY: dist test tier1 check bench benchtest clean
+.PHONY: dist test tier1 check bench benchtest ab clean
 
 dist:
 	mkdir -p dist
@@ -23,6 +23,14 @@ bench:
 # the benchmark's own tests (tracing ledger, inputs, TracedCheckpointManager)
 benchtest:
 	python3 -m pytest perfbench/test_tracing.py perfbench/test_inputs.py
+
+# interleaved, order-swapped benchmark pairs: REF's committed files
+# against the working tree (tools/ab.py; OUT= keeps the runs as JSON)
+REF ?= HEAD
+PAIRS ?= 5
+WORKLOADS ?= ingest,iterate,durable
+ab:
+	python3 tools/ab.py --ref $(REF) --pairs $(PAIRS) --workloads $(WORKLOADS) $(if $(OUT),--out $(OUT))
 
 clean:
 	rm -rf dist .cache .pytest_cache $$(find . -name __pycache__)

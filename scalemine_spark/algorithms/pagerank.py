@@ -8,10 +8,21 @@ Semantics (normative, SURVEY §2 G1):
     stop when Σ|r_{t+1}-r_t| < tol, or after max_iters / fixed_iters.
 
 Scale design:
-  * The SpMV is `edges ⋈ state ON src=id` (sort-merge at scale, AQE may flip
-    to broadcast for tiny state) followed by `groupBy(dst).sum` — Spark's
-    partial aggregation makes hot dst keys cheap (each map task emits one
-    partial per dst), and AQE skew-join splitting handles hot src joins.
+  * The SpMV is `edges ⋈ w ON src` (w = rank/out_deg) followed by
+    `groupBy(dst).sum`, and the update is `state ⋈ contribs ON id=dst`.
+    Both joins are hinted `shuffle_hash` on the vertex-sized side, so at
+    any scale each task builds one hash table of ~V/p rows and streams its
+    partition of the edge cache (or of the state) through it: no Sort on
+    either side, and the edge table is never broadcast. Left to the
+    planner, an edge table under the auto-broadcast threshold was
+    broadcast whole every iteration (AQE then read the state's shuffle
+    locally); the hints took a steady iteration from ~162 to ~139 ms and
+    a 10-iteration call from 64 to 53 jobs (117k edges, 4 cores, traced
+    benchmark runs). The state side keeps one Exchange per
+    iteration: under AQE, localCheckpoint returns the committed state
+    with UnknownPartitioning, which no hint can change. Spark's partial
+    aggregation makes hot dst keys cheap (each map task emits one partial
+    per dst).
   * Optional explicit hub handling (north rule "broadcast of high-degree hub
     vectors"): ranks of vertices with outdeg ≥ hub_threshold are broadcast
     and joined map-side against their (huge) edge fan-out, the long tail
@@ -58,9 +69,13 @@ def _prepare(edges: DataFrame, num_partitions: int | None, weight_col: str | Non
     # fixed launch cost dominated the steady-state iteration (measured:
     # 0.92s -> 0.67s/iter at 2M edges/local[32], tools/profile_iter_r6.py)
     p = num_partitions or adaptive_partitions(edges)
-    # partition AND sort the big side once: the cached ordering feeds every
-    # iteration's sort-merge join, eliminating the per-iteration O(E log E)
-    # sort of the edge table (only the V-sized rank side sorts each round)
+    # partition the big side on src once, so no iteration shuffles it. The
+    # sort is not for the join (a hash join streams the partition as
+    # cached): it pins the row order within each partition, and with it
+    # the order in which every dst's partial sum adds its float
+    # contributions — a hash exchange alone leaves that order to shuffle
+    # fetch timing, so a resumed call's re-built cache would sum in a
+    # different order (same note in hits.py)
     cols = ["src", "dst"] + (
         [F.col(weight_col).cast("double").alias("ew")] if weight_col else []
     )
@@ -258,10 +273,10 @@ def pagerank(
             hub_ids, e_hub, e_tail = hubs
             w_hub = w.join(F.broadcast(hub_ids), w.src == hub_ids.id, "left_semi")
             contrib_in = e_hub.join(F.broadcast(w_hub), "src").unionByName(
-                e_tail.join(w, "src")
+                e_tail.join(w.hint("shuffle_hash"), "src")
             )
         else:
-            contrib_in = e.join(w, "src")
+            contrib_in = e.join(w.hint("shuffle_hash"), "src")
         cexpr = F.col("w") * F.col("ew") if weight_col else F.col("w")
         contribs = contrib_in.groupBy("dst").agg(_s(cexpr).alias("contrib"))
 
@@ -272,7 +287,7 @@ def pagerank(
         # causes on Spark 4.1.
         base = (1.0 - d) / n + d * prev["dm"] / n
         new_state = (
-            state.join(contribs, state.id == contribs.dst, "left")
+            state.join(contribs.hint("shuffle_hash"), state.id == contribs.dst, "left")
             .select(
                 "id",
                 "out_deg",

@@ -15,8 +15,11 @@ i.e. both the restart mass and the dangling mass return to the SEED SET
 for seed-expansion / related-page queries on web graphs. Vertices outside
 S that are unreachable from S keep rank exactly 0.0.
 
-Scale notes: the per-iteration plan is the same SpMV join + partial-agg
-sum as global PageRank (the edge cache shuffles once, up front); the seed
+Scale notes: the per-iteration plan is global PageRank's (pagerank.py):
+the same edge cache, shuffled on src and sorted once up front (the sort
+pins the float-summation order, not the join), and the same two
+shuffled-hash joins built on the vertex-sized side — the rank/out_deg
+slice for the SpMV, contribs for the update; the seed
 set is embedded as an `isin` literal filter — callers pass a HANDFUL to a
 few thousand seeds (the PPR use case); beyond ~100k seeds a broadcast-join
 teleport table would be the right form, and this function refuses rather
@@ -93,9 +96,15 @@ def personalized_pagerank(
         w = state.filter(F.col("out_deg") > 0).select(
             F.col("id").alias("src"), (F.col("rank") / F.col("out_deg")).alias("w")
         )
-        contribs = e.join(w, "src").groupBy("dst").agg(_s(F.col("w")).alias("contrib"))
+        contribs = (
+            e.join(w.hint("shuffle_hash"), "src")
+            .groupBy("dst")
+            .agg(_s(F.col("w")).alias("contrib"))
+        )
         restart = (1.0 - d) + d * prev["dm"]  # mass returning to the seed set
-        new_state = state.join(contribs, state.id == contribs.dst, "left").select(
+        new_state = state.join(
+            contribs.hint("shuffle_hash"), state.id == contribs.dst, "left"
+        ).select(
             "id",
             "out_deg",
             (tele * F.lit(restart) + d * F.coalesce(F.col("contrib"), F.lit(0.0))).alias(

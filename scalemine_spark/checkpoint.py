@@ -50,6 +50,7 @@ FSDataInputStream, never a full download).
 from __future__ import annotations
 
 import json
+import numbers
 import posixpath
 import re
 import threading
@@ -82,6 +83,15 @@ def _as_read(schema_json):
     if isinstance(schema_json, list):
         return [_as_read(v) for v in schema_json]
     return schema_json
+
+
+def _metrics(metrics: dict) -> dict:
+    """Manifest metrics as JSON numbers: integers stay exact ints (CC's
+    64-bit fingerprint does not fit a double), everything else a float."""
+    return {
+        k: int(v) if isinstance(v, numbers.Integral) else float(v)
+        for k, v in metrics.items()
+    }
 
 
 class CheckpointManager:
@@ -162,7 +172,7 @@ class CheckpointManager:
                 "schema": json.dumps(_as_read(state.schema.jsonValue())),
                 "files": files,
                 "row_count": sum(f["rows"] for f in files),
-                "metrics": {k: float(v) for k, v in metrics.items()},
+                "metrics": _metrics(metrics),
                 "committed_at_unix": time.time(),
             }
             self._fs.write_bytes_atomic(
@@ -207,7 +217,7 @@ class CheckpointManager:
     def _write_amend(self, it: int, metrics: dict[str, float]) -> None:
         versions = self._versions().get(it, [0])
         m = self._read_manifest(it)
-        m["metrics"].update({k: float(v) for k, v in metrics.items()})
+        m["metrics"].update(_metrics(metrics))
         self._fs.write_bytes_atomic(
             self.manifest_path(it, versions[-1] + 1), json.dumps(m, indent=1).encode()
         )

@@ -131,3 +131,29 @@ def test_cc_checkpoint_resume(spark, tmp_path):
     comps2, info2 = connected_components(e, checkpointer=ck2)
     got = {r["id"]: r["comp"] for r in comps2.collect()}
     assert got == ref
+
+
+def test_manifest_metrics_keep_ints_exact(spark, tmp_path):
+    """An int metric beyond a double's 53-bit mantissa (CC's 64-bit
+    fingerprint) round-trips exactly through the commit, a queued amend, a
+    synchronous amend and read_manifest; floats stay floats."""
+    big = 2**62 + 1
+    ck = CheckpointManager(str(tmp_path), "r", "ints")
+    ck.commit(0, spark.range(3), {"h": big, "x": 0.5})
+    ck.amend_metrics(0, {"queued": big})
+    ck.flush()
+    ck.amend_metrics(0, {"sync": -big, "y": 2.0})
+    m = CheckpointManager(str(tmp_path), "r", "ints").read_manifest(0)["metrics"]
+    assert m == {"h": big, "x": 0.5, "queued": big, "sync": -big, "y": 2.0}
+    assert all(type(m[k]) is int for k in ("h", "queued", "sync"))
+    assert type(m["x"]) is float and type(m["y"]) is float
+
+
+def test_cc_round_manifest_stores_the_exact_fingerprint(spark, tmp_path):
+    from scalemine_spark.algorithms.components import _fingerprint, connected_components
+
+    e = edges_df(spark, FX.G_TWO_CC + [(20, 21), (21, 22)])
+    ck = CheckpointManager(str(tmp_path), "r", "cc")
+    connected_components(e, checkpointer=ck, endgame_rows=0)
+    m = ck.read_manifest(0)["metrics"]
+    assert {k: m[k] for k in ("c", "h")} == _fingerprint(ck.read_state(spark, 0))

@@ -18,6 +18,22 @@ def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+def _outside_caches(plan: str) -> list[str]:
+    """The plan's lines minus every InMemoryRelation's subtree (the cache's
+    own build plan, re-printed under the relation; by indentation)."""
+    out, cache_depth = [], None
+    for ln in plan.splitlines():
+        depth = len(ln) - len(ln.lstrip(" :+-"))
+        if cache_depth is not None:
+            if depth > cache_depth:
+                continue
+            cache_depth = None
+        if "InMemoryRelation" in ln:
+            cache_depth = depth
+        out.append(ln)
+    return out
+
+
 def test_html_column_pruned_for_metadata_query(spark, pages_small):
     """A lang-count over pages must not read the (huge) html BINARY column."""
     pages, _ = pages_small
@@ -117,21 +133,11 @@ def test_cc_round_exchange_budget(spark):
     def exchanges_outside_cache(plan: str) -> int:
         """Count Exchange nodes excluding the cached large-star subtree —
         InMemoryTableScan re-prints the cached plan per consumer, so a flat
-        count would double-count it. Subtree membership by indentation."""
-        n = 0
-        cache_depth = None
-        for ln in plan.splitlines():
-            depth = len(ln) - len(ln.lstrip(" :+-"))
-            if cache_depth is not None:
-                if depth > cache_depth:
-                    continue
-                cache_depth = None
-            if "InMemoryRelation" in ln:
-                cache_depth = depth
-                continue
-            if "Exchange hashpartitioning" in ln and "ReusedExchange" not in ln:
-                n += 1
-        return n
+        count would double-count it."""
+        return sum(
+            "Exchange hashpartitioning" in ln and "ReusedExchange" not in ln
+            for ln in _outside_caches(plan)
+        )
 
     # small-star segment (everything above the cached large-star relation):
     # probe exchange + partial-agg exchange + distinct exchange = 3
@@ -154,7 +160,7 @@ def test_asof_join_plan_aggregates_not_window(spark):
 
 
 def test_sorted_edge_cache_feeds_smj_without_resort(spark):
-    """The iterative-algorithm edge-cache rule (pagerank/hits/sssp/bfs/lpa/
+    """The iterative-algorithm edge-cache rule (hits/sssp/bfs/lpa/
     random_walks): a persisted cache repartitioned AND sortWithinPartitions
     on the join key feeds every per-round sort-merge join through its cached
     ordering — no Sort and no Exchange above the InMemoryTableScan. The
@@ -231,3 +237,42 @@ def test_fsm_never_plans_a_cartesian_or_nested_loop(spark):
         if "BroadcastHashJoin" in ln and "LeftSemi" in ln
     ]
     assert semi, plan
+
+
+def test_pagerank_steady_iteration_is_two_shuffled_hash_joins(spark, monkeypatch):
+    """The SpMV join (edge cache ⋈ rank/out_deg) and the state update join
+    (state ⋈ contribs) of a steady pagerank and ppr iteration are both
+    shuffled-hash joins built on the vertex-sized side, under the session's
+    own AQE: no sort-merge join, no Sort above the edge cache and no
+    broadcast of it (the planner broadcast the whole edge table each
+    iteration while it was under the auto-broadcast threshold)."""
+    import scalemine_spark.iterate as kernel
+    from scalemine_spark import fixtures as FX
+    from scalemine_spark.algorithms import pagerank, personalized_pagerank
+    from tests.conftest import edges_df
+
+    frames = []
+    materialize = kernel.materialize
+
+    def spy(frame, it, checkpointer=None, metrics=None):
+        out = materialize(frame, it, checkpointer, metrics)
+        frames.append(frame)  # executed now: AQE's final plan is fixed
+        return out
+
+    monkeypatch.setattr(kernel, "materialize", spy)
+    e = edges_df(spark, FX.g_karate_like())
+    for run in (
+        lambda: pagerank(e, fixed_iters=3),
+        lambda: personalized_pagerank(e, [0, 1], fixed_iters=3),
+    ):
+        frames.clear()
+        run()
+        plan = _plan(frames[-1])
+        lines = _outside_caches(plan)
+        final = lines[: next(i for i, ln in enumerate(lines) if "== Initial Plan ==" in ln)]
+        # both joins build their right side: the rank/out_deg slice, contribs
+        shj = [ln for ln in final if "ShuffledHashJoin" in ln]
+        assert len(shj) == 2 and all("BuildRight" in ln for ln in shj), plan
+        assert not any("SortMergeJoin" in ln for ln in lines), plan
+        assert not any(ln.lstrip(" :+-*()0123456789").startswith("Sort ") for ln in lines), plan
+        assert not any("Broadcast" in ln for ln in lines), plan
