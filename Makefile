@@ -27,7 +27,7 @@ benchtest:
 # interleaved, order-swapped benchmark pairs: REF's committed files
 # against the working tree (tools/ab.py; OUT= keeps the runs as JSON)
 REF ?= HEAD
-PAIRS ?= 5
+PAIRS ?= 10
 WORKLOADS ?= ingest,iterate,durable
 ab:
 	python3 tools/ab.py --ref $(REF) --pairs $(PAIRS) --workloads $(WORKLOADS) $(if $(OUT),--out $(OUT))

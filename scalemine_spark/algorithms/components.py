@@ -109,17 +109,6 @@ from scalemine_spark.checkpoint import CheckpointManager
 from scalemine_spark.iterate import iterate, resume
 
 
-def _fingerprint(e: DataFrame) -> dict[str, int]:
-    """Set fingerprint {c: rows, h: xor hash} of a (deduplicated) pointer-edge
-    set. Only used on the resume path; in the main loop the fingerprint
-    rides the round's Observation for free."""
-    row = e.agg(
-        F.count("*").alias("c"),
-        F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-    ).collect()[0]
-    return {"c": int(row["c"] or 0), "h": int(row["h"] or 0)}
-
-
 def _unionfind_numpy(u, v):
     """Vectorized min-label connected components over an edge list of int64
     arrays. Returns (ids, parent): sorted unique vertex ids and, per index,
@@ -288,12 +277,17 @@ def connected_components(
     )
 
     # a resumed set's fingerprint seeds the convergence test, the tail width
-    # and the endgame test (committed state is deduped -> comparable)
-    state, _, start = resume(checkpointer, spark, max_rounds)
+    # and the endgame test (committed state is deduped -> comparable). It is
+    # read from the manifest, not recomputed: c is the committed row count,
+    # h the round's observed hash, kept exact as a JSON int. The endgame's
+    # commit (and a round whose metrics amend never landed) has no h; the
+    # first resumed round then cannot compare equal, which costs at most
+    # one more round.
+    state, manifest, start = resume(checkpointer, spark, max_rounds)
     fp = None
     if state is not None:
         e = state
-        fp = _fingerprint(e)
+        fp = {"c": manifest["row_count"], "h": manifest["metrics"].get("h")}
 
     def small(s):
         # the pointer set was OBSERVED small (a round's Observation or the

@@ -10,19 +10,25 @@ Semantics (normative, SURVEY §2 G1):
 Scale design:
   * The SpMV is `edges ⋈ w ON src` (w = rank/out_deg) followed by
     `groupBy(dst).sum`, and the update is `state ⋈ contribs ON id=dst`.
-    Both joins are hinted `shuffle_hash` on the vertex-sized side, so at
-    any scale each task builds one hash table of ~V/p rows and streams its
-    partition of the edge cache (or of the state) through it: no Sort on
-    either side, and the edge table is never broadcast. Left to the
-    planner, an edge table under the auto-broadcast threshold was
-    broadcast whole every iteration (AQE then read the state's shuffle
-    locally); the hints took a steady iteration from ~162 to ~139 ms and
-    a 10-iteration call from 64 to 53 jobs (117k edges, 4 cores, traced
-    benchmark runs). The state side keeps one Exchange per
-    iteration: under AQE, localCheckpoint returns the committed state
-    with UnknownPartitioning, which no hint can change. Spark's partial
-    aggregation makes hot dst keys cheap (each map task emits one partial
-    per dst).
+    Both joins are hinted `shuffle_hash` on the vertex-sized side: each
+    task builds one in-memory hash table and streams its partition of the
+    edge cache (or of the state) through it, with no Sort on either side.
+    The SpMV build is the task's ~V/p slice of w (the edge cache's width);
+    the update build is contribs, ~V/spark.sql.shuffle.partitions rows
+    (the groupBy's width). The hint skips Spark's build-size check, and a
+    hash join's build side does not spill, so a partition must hold its
+    slice in executor memory. Left to the planner, an edge table under the
+    auto-broadcast threshold was broadcast whole every iteration; the hints
+    took a steady iteration from ~162 to ~139 ms and a 10-iteration call
+    from 64 to 53 jobs (117k edges, 4 cores, traced benchmark runs). Over
+    the threshold the planner chose sort-merge joins for both; at 16M
+    edges and 1.6M vertices (fixtures.synth_edges_distributed, 4 cores,
+    8 partitions, 3 interleaved pairs) the steady iteration went from
+    3.32 to 3.13 s median. Larger graphs are not measured. The state side
+    keeps one Exchange per iteration: under AQE, localCheckpoint returns
+    the committed state with UnknownPartitioning, which no hint can
+    change. Spark's partial aggregation makes hot dst keys cheap (each
+    map task emits one partial per dst).
   * Optional explicit hub handling (north rule "broadcast of high-degree hub
     vectors"): ranks of vertices with outdeg ≥ hub_threshold are broadcast
     and joined map-side against their (huge) edge fan-out, the long tail

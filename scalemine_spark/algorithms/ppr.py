@@ -19,8 +19,9 @@ Scale notes: the per-iteration plan is global PageRank's (pagerank.py):
 the same edge cache, shuffled on src and sorted once up front (the sort
 pins the float-summation order, not the join), and the same two
 shuffled-hash joins built on the vertex-sized side — the rank/out_deg
-slice for the SpMV, contribs for the update; the seed
-set is embedded as an `isin` literal filter — callers pass a HANDFUL to a
+slice for the SpMV, contribs for the update (their build sizes, memory
+note and measurements are in pagerank.py's docstring); the seed set is
+embedded as an `isin` literal filter — callers pass a HANDFUL to a
 few thousand seeds (the PPR use case); beyond ~100k seeds a broadcast-join
 teleport table would be the right form, and this function refuses rather
 than silently building a megabyte-scale plan literal. exact_sums follows

@@ -150,10 +150,26 @@ def test_manifest_metrics_keep_ints_exact(spark, tmp_path):
 
 
 def test_cc_round_manifest_stores_the_exact_fingerprint(spark, tmp_path):
-    from scalemine_spark.algorithms.components import _fingerprint, connected_components
+    """Each round's manifest holds the committed set's exact fingerprint,
+    and a resume seeds its convergence test from it: resumed after the
+    converged round, one round reproduces the stored fingerprint and
+    stops (a rounded h would not compare equal and run a second)."""
+    from scalemine_spark.algorithms import connected_components
 
     e = edges_df(spark, FX.G_TWO_CC + [(20, 21), (21, 22)])
     ck = CheckpointManager(str(tmp_path), "r", "cc")
-    connected_components(e, checkpointer=ck, endgame_rows=0)
-    m = ck.read_manifest(0)["metrics"]
-    assert {k: m[k] for k in ("c", "h")} == _fingerprint(ck.read_state(spark, 0))
+    _, info = connected_components(e, checkpointer=ck, endgame_rows=0)
+    assert info["converged"]
+    for it in range(info["rounds"]):
+        m = ck.read_manifest(it)
+        row = ck.read_state(spark, it).agg(
+            F.count("*").alias("c"), F.bit_xor(F.xxhash64("u", "v")).alias("h")
+        ).collect()[0]
+        assert m["metrics"]["c"] == m["row_count"] == row["c"]
+        assert m["metrics"]["h"] == row["h"]
+
+    ck2 = CheckpointManager(str(tmp_path), "r", "cc")
+    _, info2 = connected_components(e, checkpointer=ck2, endgame_rows=0)
+    assert info2["converged"]
+    assert len(info2["round_seconds"]) == 1
+    assert info2["rounds"] == info["rounds"] + 1

@@ -3,14 +3,15 @@
 working tree.
 
     python3 tools/ab.py [--ref HEAD] [--workloads ingest,iterate,durable] \\
-        [--pairs 5] [--seconds 6] [--seed 42] [--out BENCH/ab_<name>.json]
+        [--pairs 10] [--seed 42] [--out BENCH/ab_<name>.json]
 
 The ref's committed files are exported (``git archive``) to a fresh
 directory under the temp dir; the working tree runs as it stands,
 uncommitted changes included. Each pair runs ``perfbench/run.py`` once in
-each tree, one process after the other, for every workload in turn: pair
-0 runs the ref first, pair 1 the working tree first, and so on, so a
-drift of the host shows up as a spread rather than as a gain. Every pair's
+each tree at the benchmark's own run length, one process after the other,
+for every workload in turn: pair 0 runs the ref first, pair 1 the working
+tree first, and so on, so a drift of the host shows up as a spread rather
+than as a gain. Ten pairs, the default, is what a claimed gain needs. Every pair's
 end-to-end metrics are printed as they come in, then per workload and
 metric the two medians, their relative difference, the quartile spread of
 the ref's runs and the number of pairs the working tree won (the
@@ -53,9 +54,8 @@ def export(ref: str, dest: str) -> str:
     return sha
 
 
-def run_once(tree: str, workload: str, seed: int, seconds: float) -> dict:
-    cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+def run_once(tree: str, workload: str, seed: int) -> dict:
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed)]
     proc = subprocess.run(cmd, cwd=tree, capture_output=True, text=True, timeout=900)
     lines = proc.stdout.strip().splitlines()
     if proc.returncode != 0 or len(lines) < 2:
@@ -103,8 +103,7 @@ def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--ref", default="HEAD")
     ap.add_argument("--workloads", default="ingest,iterate,durable")
-    ap.add_argument("--pairs", type=int, default=5)
-    ap.add_argument("--seconds", type=float, default=6.0)
+    ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--out")
     args = ap.parse_args(argv)
@@ -123,7 +122,7 @@ def main(argv=None) -> int:
                 rec = {"pair": i, "workload": wl, "order": list(order)}
                 for side in order:
                     tree = ref_tree if side == "ref" else ROOT
-                    rec[side] = run_once(tree, wl, args.seed, args.seconds)
+                    rec[side] = run_once(tree, wl, args.seed)
                 runs.append(rec)
                 cells = "  ".join(
                     f"{m} {rec['ref']['metrics'][m]:.4g}->{rec['work']['metrics'][m]:.4g}"
@@ -151,7 +150,6 @@ def main(argv=None) -> int:
             "work_head": _git("rev-parse", "HEAD"),
             "work_dirty": bool(_git("status", "--porcelain", "--untracked-files=no")),
             "cores": len(os.sched_getaffinity(0)),
-            "seconds": args.seconds,
             "seed": args.seed,
             "finished_unix": time.time(),
             "summary": summary,
