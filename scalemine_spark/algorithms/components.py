@@ -52,13 +52,15 @@ efficiency 0.53-0.76 in round 3's protocol). Each round therefore
 re-derives its shuffle parallelism from the PREVIOUS round's observed row
 count (free — it rides the convergence Observation):
 ``p_round = clamp(ceil(rows / 128k), defaultParallelism, p0)``, applied by
-setting the session's shuffle-partitions conf for the round's plan and
-restoring it afterwards. With AQE on, coalescePartitions does this at
-runtime already; the protocol (and many production iterative jobs) runs
-AQE off, where this is the only mechanism.
-The conf stays because both alternatives measured slower on perfbench's
-117k-edge graph (4 cores, AQE on, 10 interleaved pairs): the session width
-with AQE coalescing +12 % per call, ``repartition(p_round, "v")`` +10 %.
+setting ``spark.sql.shuffle.partitions`` for the round's plan on the loop's
+own child session (iterate.loop_session), never on the caller's: a query
+planned concurrently on the caller's session keeps its width. With AQE
+on, coalescePartitions does this at runtime already; the protocol (and
+many production iterative jobs) runs AQE off, where this is the only
+mechanism. The per-round width stays because both alternatives measured
+slower on perfbench's 117k-edge graph (4 cores, AQE on, 10 interleaved
+pairs): the session width with AQE coalescing +12 % per call,
+``repartition(p_round, "v")`` +10 %.
 
 Driver-side union-find ENDGAME (round 5): the collapsed tail is
 ELIMINATED rather than amortized. Once a round's Observation reports the
@@ -106,7 +108,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from scalemine_spark.checkpoint import CheckpointManager
-from scalemine_spark.iterate import iterate, resume
+from scalemine_spark.iterate import iterate, loop_session, resume
 
 
 def _unionfind_numpy(u, v):
@@ -202,8 +204,8 @@ def _cc_round(e: DataFrame) -> tuple[DataFrame, DataFrame]:
     pairs and drop u == v). Tolerates duplicate rows in `e` — min-aggregates
     absorb them, the closing distinct restores set semantics — which is what
     lets round 0 skip the init distinct. Shuffle parallelism comes from the
-    session's shuffle-partitions conf, which the caller sets per round
-    (tail-round coalescing — module docstring).
+    session's shuffle-partitions conf, which connected_components sets per
+    round on its own child session (tail-round coalescing — module docstring).
     """
     # ---- large-star: m(x) from two V-sized partial aggregates ---------
     a_out = e.groupBy("u").agg(F.min("v").alias("mo"))
@@ -248,7 +250,6 @@ def connected_components(
     replaced by the driver-side union-find endgame (module docstring); 0
     disables. Size it to driver memory: rows * 16 bytes must fit
     comfortably (default 8M rows = ~128 MB)."""
-    spark = edges.sparkSession
     # scale-adaptive round-0 width and tail-coalescing cap (round 6, guide
     # §2) — same derivation and rationale as pagerank._prepare / tuning.py;
     # the tail rounds already re-derived their width from observed rows,
@@ -256,132 +257,117 @@ def connected_components(
     from scalemine_spark.tuning import adaptive_partitions
 
     p = num_partitions or adaptive_partitions(edges)
+    # the rounds set their width on the loop's own session, under the
+    # caller's AQE (iterate.loop_session): no other query sees it
+    with loop_session(edges) as (edges, back):
+        spark = edges.sparkSession
 
-    # verts feeds ONLY the final comps join (unlike the per-iteration
-    # algorithms, nothing here needs a specific alignment width), so the
-    # post-distinct repartition was a pure extra V-sized exchange — the
-    # distinct's own hash(id) output partitioning serves the join as-is
-    # (round 6, guide §2.4)
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .persist()
-    )
-
-    # canonicalized raw pairs, duplicates and all — round 0 absorbs them
-    # (no init distinct, no init fingerprint: both were full-E passes)
-    e = edges.filter(F.col("src") != F.col("dst")).select(
-        F.greatest("src", "dst").alias("u"),
-        F.least("src", "dst").alias("v"),
-    )
-
-    # a resumed set's fingerprint seeds the convergence test, the tail width
-    # and the endgame test (committed state is deduped -> comparable). It is
-    # read from the manifest, not recomputed: c is the committed row count,
-    # h the round's observed hash, kept exact as a JSON int. The endgame's
-    # commit (and a round whose metrics amend never landed) has no h; the
-    # first resumed round then cannot compare equal, which costs at most
-    # one more round.
-    state, manifest, start = resume(checkpointer, spark, max_rounds)
-    fp = None
-    if state is not None:
-        e = state
-        fp = {"c": manifest["row_count"], "h": manifest["metrics"].get("h")}
-
-    def small(s):
-        # the pointer set was OBSERVED small (a round's Observation or the
-        # resume fingerprint; the set is canonical u > v): solve locally
-        return s is not None and 0 < s["c"] < endgame_rows
-
-    t0 = time.monotonic()
-    # tail-round coalescing (module docstring): round 0 runs at p, each later
-    # round at the previous round's observed pointer count / 128k, clamped to
-    # [defaultParallelism, p]. The conf is session-global until the finally
-    # restores it: a query planned concurrently on this session would see
-    # the narrowed width, so the engine runs one algorithm per session.
-    rows_per_partition = 1 << 17
-    dp = max(1, spark.sparkContext.defaultParallelism)
-    sp_key = "spark.sql.shuffle.partitions"
-    sp_saved = spark.conf.get(sp_key)
-    # if another job is ALREADY active on this session when CC starts, its
-    # plans could pick up our per-round width — warn instead of relying on
-    # the one-algorithm-per-session comment alone (round-4 advisory)
-    if spark.sparkContext.statusTracker().getActiveJobsIds():
-        import warnings
-
-        warnings.warn(
-            "connected_components: other Spark jobs are active on this "
-            "session; tail-round coalescing narrows the session-global "
-            "spark.sql.shuffle.partitions while the loop runs, which would "
-            "affect any query planned concurrently. Give CC its own "
-            "SparkSession in shared-session services.",
-            RuntimeWarning,
-            stacklevel=2,
+        # verts feeds ONLY the final comps join (unlike the per-iteration
+        # algorithms, nothing here needs a specific alignment width), so the
+        # post-distinct repartition was a pure extra V-sized exchange — the
+        # distinct's own hash(id) output partitioning serves the join as-is
+        # (round 6, guide §2.4)
+        verts = (
+            edges.select(F.col("src").alias("id"))
+            .union(edges.select(F.col("dst").alias("id")))
+            .distinct()
+            .persist()
         )
-    ls_caches: list[DataFrame] = []  # the live large-star cache
 
-    def step(e, it, prev):
-        p_round = p if prev is None else min(p, max(dp, -(-prev["c"] // rows_per_partition)))
-        spark.conf.set(sp_key, str(p_round))
-        # the previous round's cache served its job and is no longer read
-        if ls_caches:
-            ls_caches.pop().unpersist()
-        out, ls = _cc_round(e)
-        ls_caches.append(ls)
-        # the convergence fingerprint rides the materializing action
-        return out, {"c": F.count(F.lit(1)), "h": F.bit_xor(F.xxhash64("u", "v"))}
-
-    try:
-        loop = iterate(
-            step,
-            e,
-            start,
-            start if small(fp) else max_rounds,  # a small resumed set goes straight to the endgame
-            name="cc_fp",
-            checkpointer=checkpointer,
-            scalars=fp,
-            until=lambda s, prev: s == prev or small(s),
+        # canonicalized raw pairs, duplicates and all — round 0 absorbs them
+        # (no init distinct, no init fingerprint: both were full-E passes)
+        e = edges.filter(F.col("src") != F.col("dst")).select(
+            F.greatest("src", "dst").alias("u"),
+            F.least("src", "dst").alias("v"),
         )
-    finally:
-        spark.conf.set(sp_key, sp_saved)
-        for ls in ls_caches:
-            ls.unpersist()
-    e = loop.state
-    fps = ([fp] if fp is not None else []) + loop.scalars
-    converged = len(fps) >= 2 and fps[-1] == fps[-2]
-    last = fps[-1] if fps else None
-    rounds = start + len(loop.scalars)
-    n_pointer_edges = last["c"] if last else 0
-    round_secs = list(loop.iter_seconds)
 
-    # driver-side union-find endgame (module docstring): stop shuffling,
-    # solve locally, commit the exact final star forest
-    endgame_secs: float | None = None
-    if not converged and rounds < max_rounds and small(last):
-        t_r = time.monotonic()
-        e, n_pointer_edges = _endgame_star_forest(e)
-        if checkpointer is not None:
-            e = checkpointer.commit(
-                rounds, e, {"iter_seconds": time.monotonic() - t_r, "endgame": True}
+        # a resumed set's fingerprint seeds the convergence test, the tail width
+        # and the endgame test (committed state is deduped -> comparable). It is
+        # read from the manifest, not recomputed: c is the committed row count,
+        # h the round's observed hash, kept exact as a JSON int. The endgame's
+        # commit (and a round whose metrics amend never landed) has no h; the
+        # first resumed round then cannot compare equal, which costs at most
+        # one more round.
+        state, manifest, start = resume(checkpointer, spark, max_rounds)
+        fp = None
+        if state is not None:
+            e = state
+            fp = {"c": manifest["row_count"], "h": manifest["metrics"].get("h")}
+
+        def small(s):
+            # the pointer set was OBSERVED small (a round's Observation or the
+            # resume fingerprint; the set is canonical u > v): solve locally
+            return s is not None and 0 < s["c"] < endgame_rows
+
+        t0 = time.monotonic()
+        # tail-round coalescing (module docstring): round 0 runs at p, each later
+        # round at the previous round's observed pointer count / 128k, clamped to
+        # [defaultParallelism, p], set on the loop's own session
+        rows_per_partition = 1 << 17
+        dp = max(1, spark.sparkContext.defaultParallelism)
+        ls_caches: list[DataFrame] = []  # the live large-star cache
+
+        def step(e, it, prev):
+            p_round = p if prev is None else min(p, max(dp, -(-prev["c"] // rows_per_partition)))
+            spark.conf.set("spark.sql.shuffle.partitions", str(p_round))
+            # the previous round's cache served its job and is no longer read
+            if ls_caches:
+                ls_caches.pop().unpersist()
+            out, ls = _cc_round(e)
+            ls_caches.append(ls)
+            # the convergence fingerprint rides the materializing action
+            return out, {"c": F.count(F.lit(1)), "h": F.bit_xor(F.xxhash64("u", "v"))}
+
+        try:
+            loop = iterate(
+                step,
+                e,
+                start,
+                # a small resumed set goes straight to the endgame
+                start if small(fp) else max_rounds,
+                name="cc_fp",
+                checkpointer=checkpointer,
+                scalars=fp,
+                until=lambda s, prev: s == prev or small(s),
             )
-            checkpointer.flush()
-        endgame_secs = time.monotonic() - t_r
-        round_secs.append(endgame_secs)
-        rounds += 1
-        converged = True
+        finally:
+            for ls in ls_caches:
+                ls.unpersist()
+        e = loop.state
+        fps = ([fp] if fp is not None else []) + loop.scalars
+        converged = len(fps) >= 2 and fps[-1] == fps[-2]
+        last = fps[-1] if fps else None
+        rounds = start + len(loop.scalars)
+        n_pointer_edges = last["c"] if last else 0
+        round_secs = list(loop.iter_seconds)
 
-    comps = (
-        verts.join(e.select(F.col("u").alias("id"), F.col("v").alias("root")), "id", "left")
-        .select("id", F.coalesce("root", "id").alias("comp"))
-    )
-    info = {
-        "rounds": rounds,
-        "converged": converged,
-        "seconds": time.monotonic() - t0,
-        "round_seconds": round_secs,
-        "n_pointer_edges": n_pointer_edges,
-        "endgame_seconds": endgame_secs,  # None = endgame never fired
-    }
-    verts.unpersist()
-    return comps, info
+        # driver-side union-find endgame (module docstring): stop shuffling,
+        # solve locally, commit the exact final star forest
+        endgame_secs: float | None = None
+        if not converged and rounds < max_rounds and small(last):
+            t_r = time.monotonic()
+            e, n_pointer_edges = _endgame_star_forest(e)
+            if checkpointer is not None:
+                e = checkpointer.commit(
+                    rounds, e, {"iter_seconds": time.monotonic() - t_r, "endgame": True}
+                )
+                checkpointer.flush()
+            endgame_secs = time.monotonic() - t_r
+            round_secs.append(endgame_secs)
+            rounds += 1
+            converged = True
+
+        comps = (
+            verts.join(e.select(F.col("u").alias("id"), F.col("v").alias("root")), "id", "left")
+            .select("id", F.coalesce("root", "id").alias("comp"))
+        )
+        info = {
+            "rounds": rounds,
+            "converged": converged,
+            "seconds": time.monotonic() - t0,
+            "round_seconds": round_secs,
+            "n_pointer_edges": n_pointer_edges,
+            "endgame_seconds": endgame_secs,  # None = endgame never fired
+        }
+        verts.unpersist()
+        return back(comps), info

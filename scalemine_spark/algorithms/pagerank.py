@@ -13,9 +13,8 @@ Scale design:
     Both joins are hinted `shuffle_hash` on the vertex-sized side: each
     task builds one in-memory hash table and streams its partition of the
     edge cache (or of the state) through it, with no Sort on either side.
-    The SpMV build is the task's ~V/p slice of w (the edge cache's width);
-    the update build is contribs, ~V/spark.sql.shuffle.partitions rows
-    (the groupBy's width). The hint skips Spark's build-size check, and a
+    Both builds are a task's ~V/p slice (w, and contribs), p the edge
+    cache's width. The hint skips Spark's build-size check, and a
     hash join's build side does not spill, so a partition must hold its
     slice in executor memory. Left to the planner, an edge table under the
     auto-broadcast threshold was broadcast whole every iteration; the hints
@@ -24,11 +23,17 @@ Scale design:
     the threshold the planner chose sort-merge joins for both; at 16M
     edges and 1.6M vertices (fixtures.synth_edges_distributed, 4 cores,
     8 partitions, 3 interleaved pairs) the steady iteration went from
-    3.32 to 3.13 s median. Larger graphs are not measured. The state side
-    keeps one Exchange per iteration: under AQE, localCheckpoint returns
-    the committed state with UnknownPartitioning, which no hint can
-    change. Spark's partial aggregation makes hot dst keys cheap (each
-    map task emits one partial per dst).
+    3.32 to 3.13 s median. Larger graphs are not measured.
+  * The loop runs in its own session (iterate.loop_session) at
+    spark.sql.shuffle.partitions = p with AQE off. The committed state then
+    keeps hashpartitioning(id, p) across localCheckpoint (under AQE it came
+    back with UnknownPartitioning and was re-shuffled twice per iteration),
+    so both joins read the state and the edge cache in place: a steady
+    iteration's only Exchange is the V-sized partial aggregate
+    groupBy(dst). Spark's partial aggregation makes hot dst keys cheap
+    (each map task emits one partial per dst). A 10-iteration call takes
+    15 job ids instead of 53, and at the 16M-edge holdout the steady
+    iteration is faster too (BENCH/holdout_pr11.json).
   * Optional explicit hub handling (north rule "broadcast of high-degree hub
     vectors"): ranks of vertices with outdeg ≥ hub_threshold are broadcast
     and joined map-side against their (huge) edge fan-out, the long tail
@@ -52,7 +57,7 @@ from pyspark.sql import functions as F
 
 from scalemine_spark.checkpoint import CheckpointManager
 from scalemine_spark.graph import vertex_ids
-from scalemine_spark.iterate import iterate, resume
+from scalemine_spark.iterate import iterate, loop_session, resume
 
 
 def _prepare(edges: DataFrame, num_partitions: int | None, weight_col: str | None = None):
@@ -169,197 +174,203 @@ def pagerank(
     the SpMV multiplies by ew before the same partial agg); weight_col=None
     preserves the unweighted path bit-for-bit.
     """
-    spark = edges.sparkSession
-    e, verts, p = _prepare(edges, num_partitions, weight_col)
-    # one scalar job yields BOTH |V| and max out-degree — the max lets the
-    # 'auto' hub cutoff skip its exact top-K scan entirely on hubless graphs
-    # (measured round 3: the orderBy(desc).limit(K) + filter-count job pair
-    # cost ~3.5s fixed at sf0.1/local[32] only to discover n_hubs == 0)
-    vstats = verts.agg(
-        F.count(F.lit(1)).alias("n"), F.max("out_deg").alias("mx")
-    ).collect()[0]
-    n = int(vstats["n"] or 0)
-    max_out_deg = int(vstats["mx"] or 0)
-    n_edges = e.count()
-    if n == 0:
-        return verts.select("id", F.lit(0.0).alias("rank")), {"iters": 0, "n": 0}
+    from scalemine_spark.tuning import adaptive_partitions
 
-    total_iters = fixed_iters if fixed_iters is not None else max_iters
-    state, _, start_iter = resume(checkpointer, spark, total_iters)  # (id, out_deg, rank)
-    if state is None:
-        state = verts.withColumn("rank", F.lit(1.0 / n))
+    # the loop's own session at the edge cache's width, AQE off: the
+    # committed state stays co-partitioned with the cache (scale notes)
+    p = num_partitions or adaptive_partitions(edges)
+    with loop_session(edges, p) as (edges, back):
+        spark = edges.sparkSession
+        e, verts, p = _prepare(edges, p, weight_col)
+        # one scalar job yields BOTH |V| and max out-degree — the max lets the
+        # 'auto' hub cutoff skip its exact top-K scan entirely on hubless graphs
+        # (measured round 3: the orderBy(desc).limit(K) + filter-count job pair
+        # cost ~3.5s fixed at sf0.1/local[32] only to discover n_hubs == 0)
+        vstats = verts.agg(
+            F.count(F.lit(1)).alias("n"), F.max("out_deg").alias("mx")
+        ).collect()[0]
+        n = int(vstats["n"] or 0)
+        max_out_deg = int(vstats["mx"] or 0)
+        n_edges = e.count()
+        if n == 0:
+            return back(verts.select("id", F.lit(0.0).alias("rank"))), {"iters": 0, "n": 0}
 
-    n_hubs = 0
-    hub_reason = None  # why no hub split is active (info['hub_reason'])
-    target = min(65536, max(16, n // 1000))
-    was_auto = hub_threshold == "auto"
-    if was_auto:
-        if max_out_deg < hub_floor:
-            hub_reason = "below_hub_floor"
-            # no vertex clears the floor — hubless graph, identical plan to
-            # hub_threshold=None with ZERO extra jobs (the max rode vstats)
-            hub_threshold = None
-        else:
-            # top ~V/1000 out-degree vertices (<= 64k: broadcast slice
-            # ~1 MB), floor 1024. The cutoff is the EXACT K-th largest
-            # out-degree (TakeOrdered over V rows — approxQuantile at
-            # q=0.999 is useless on heavy tails: its 0.001 relative error
-            # spans the entire hub region and collapses to the max).
-            kth = (
-                verts.orderBy(F.col("out_deg").desc())
-                .limit(target)
-                .agg(F.min("out_deg").alias("thr"))
-                .collect()[0]["thr"]
-            )
-            hub_threshold = int(max(hub_floor, kth or 0))
+        total_iters = fixed_iters if fixed_iters is not None else max_iters
+        state, _, start_iter = resume(checkpointer, spark, total_iters)  # (id, out_deg, rank)
+        if state is None:
+            state = verts.withColumn("rank", F.lit(1.0 / n))
 
-    hubs = None
-    if hub_threshold is not None:
-        # hub_ids takes ALL vertices >= the cutoff, so degree ties can
-        # inflate the set far beyond the intended size (worst case:
-        # near-uniform graph with every degree >= the cutoff). Auto path:
-        # > 2x target means the quantile pick was defeated — abandon.
-        # Pinned path: honor the user up to an absolute ~1 MB broadcast
-        # budget (128k long ids) — docstring has the rationale.
-        hub_cap = 2 * target if was_auto else 131072
-        hub_ids = verts.filter(F.col("out_deg") >= hub_threshold).select("id").persist()
-        n_hubs = hub_ids.count()
-        if n_hubs == 0 or n_hubs > hub_cap:
-            # record WHY the split was dropped (info['hub_reason']) — and for
-            # a user-PINNED threshold that hit the broadcast-budget cap,
-            # warn loudly: silently flipping info['hub_threshold'] to None
-            # was too easy to miss (round-4 advisory).
-            hub_reason = (
-                "no_vertices_qualify" if n_hubs == 0
-                else ("tie_inflation" if was_auto else "broadcast_budget_cap")
-            )
-            if not was_auto and n_hubs > hub_cap:
-                import warnings
-
-                warnings.warn(
-                    f"pagerank: pinned hub_threshold={hub_threshold} matches "
-                    f"{n_hubs} vertices, over the {hub_cap}-id broadcast "
-                    "budget — hub split disabled (plain shuffle join)",
-                    RuntimeWarning,
-                    stacklevel=2,
+        n_hubs = 0
+        hub_reason = None  # why no hub split is active (info['hub_reason'])
+        target = min(65536, max(16, n // 1000))
+        was_auto = hub_threshold == "auto"
+        if was_auto:
+            if max_out_deg < hub_floor:
+                hub_reason = "below_hub_floor"
+                # no vertex clears the floor — hubless graph, identical plan to
+                # hub_threshold=None with ZERO extra jobs (the max rode vstats)
+                hub_threshold = None
+            else:
+                # top ~V/1000 out-degree vertices (<= 64k: broadcast slice
+                # ~1 MB), floor 1024. The cutoff is the EXACT K-th largest
+                # out-degree (TakeOrdered over V rows — approxQuantile at
+                # q=0.999 is useless on heavy tails: its 0.001 relative error
+                # spans the entire hub region and collapses to the max).
+                kth = (
+                    verts.orderBy(F.col("out_deg").desc())
+                    .limit(target)
+                    .agg(F.min("out_deg").alias("thr"))
+                    .collect()[0]["thr"]
                 )
-            hub_ids.unpersist()
-            hub_threshold = None
-        else:
-            e_hub = e.join(F.broadcast(hub_ids), e.src == hub_ids.id, "left_semi").persist()
-            e_tail = e.join(F.broadcast(hub_ids), e.src == hub_ids.id, "left_anti").persist()
-            # materialize the split, then drop the unsplit cache — at scale
-            # holding e AND its partition (e_hub ∪ e_tail) doubles edge memory
-            e_hub.count()
-            e_tail.count()
-            e.unpersist()
-            hubs = (hub_ids, e_hub, e_tail)
+                hub_threshold = int(max(hub_floor, kth or 0))
 
-    t0 = time.monotonic()
+        hubs = None
+        if hub_threshold is not None:
+            # hub_ids takes ALL vertices >= the cutoff, so degree ties can
+            # inflate the set far beyond the intended size (worst case:
+            # near-uniform graph with every degree >= the cutoff). Auto path:
+            # > 2x target means the quantile pick was defeated — abandon.
+            # Pinned path: honor the user up to an absolute ~1 MB broadcast
+            # budget (128k long ids) — docstring has the rationale.
+            hub_cap = 2 * target if was_auto else 131072
+            hub_ids = verts.filter(F.col("out_deg") >= hub_threshold).select("id").persist()
+            n_hubs = hub_ids.count()
+            if n_hubs == 0 or n_hubs > hub_cap:
+                # record WHY the split was dropped (info['hub_reason']) — and for
+                # a user-PINNED threshold that hit the broadcast-budget cap,
+                # warn loudly: silently flipping info['hub_threshold'] to None
+                # was too easy to miss (round-4 advisory).
+                hub_reason = (
+                    "no_vertices_qualify" if n_hubs == 0
+                    else ("tie_inflation" if was_auto else "broadcast_budget_cap")
+                )
+                if not was_auto and n_hubs > hub_cap:
+                    import warnings
 
-    # one-time scalar pass; thereafter dangling/total come from the fused
-    # per-iteration observation (mass is conserved, so the stats of the
-    # committed state feed the next iteration's update).
-    def _s(col):  # sum, optionally in exact (associative) decimal
-        if exact_sums:
-            return F.sum(col.cast("decimal(38,18)")).cast("double")
-        return F.sum(col)
+                    warnings.warn(
+                        f"pagerank: pinned hub_threshold={hub_threshold} matches "
+                        f"{n_hubs} vertices, over the {hub_cap}-id broadcast "
+                        "budget — hub split disabled (plain shuffle join)",
+                        RuntimeWarning,
+                        stacklevel=2,
+                    )
+                hub_ids.unpersist()
+                hub_threshold = None
+            else:
+                e_hub = e.join(F.broadcast(hub_ids), e.src == hub_ids.id, "left_semi").persist()
+                e_tail = e.join(F.broadcast(hub_ids), e.src == hub_ids.id, "left_anti").persist()
+                # materialize the split, then drop the unsplit cache — at scale
+                # holding e AND its partition (e_hub ∪ e_tail) doubles edge memory
+                e_hub.count()
+                e_tail.count()
+                e.unpersist()
+                hubs = (hub_ids, e_hub, e_tail)
 
-    scal = state.agg(
-        _s(F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(0.0)).alias("dm"),
-        _s(F.col("rank")).alias("total"),
-    ).collect()[0]
-    dangling = float(scal["dm"] or 0.0)
+        t0 = time.monotonic()
 
-    def step(state, it, prev):
-        w = state.filter(F.col("out_deg") > 0).select(
-            F.col("id").alias("src"), (F.col("rank") / F.col("out_deg")).alias("w")
-        )
-        if hubs is not None:
-            hub_ids, e_hub, e_tail = hubs
-            w_hub = w.join(F.broadcast(hub_ids), w.src == hub_ids.id, "left_semi")
-            contrib_in = e_hub.join(F.broadcast(w_hub), "src").unionByName(
-                e_tail.join(w.hint("shuffle_hash"), "src")
+        # one-time scalar pass; thereafter dangling/total come from the fused
+        # per-iteration observation (mass is conserved, so the stats of the
+        # committed state feed the next iteration's update).
+        def _s(col):  # sum, optionally in exact (associative) decimal
+            if exact_sums:
+                return F.sum(col.cast("decimal(38,18)")).cast("double")
+            return F.sum(col)
+
+        scal = state.agg(
+            _s(F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(0.0)).alias("dm"),
+            _s(F.col("rank")).alias("total"),
+        ).collect()[0]
+        dangling = float(scal["dm"] or 0.0)
+
+        def step(state, it, prev):
+            w = state.filter(F.col("out_deg") > 0).select(
+                F.col("id").alias("src"), (F.col("rank") / F.col("out_deg")).alias("w")
             )
-        else:
-            contrib_in = e.join(w.hint("shuffle_hash"), "src")
-        cexpr = F.col("w") * F.col("ew") if weight_col else F.col("w")
-        contribs = contrib_in.groupBy("dst").agg(_s(cexpr).alias("contrib"))
+            if hubs is not None:
+                hub_ids, e_hub, e_tail = hubs
+                w_hub = w.join(F.broadcast(hub_ids), w.src == hub_ids.id, "left_semi")
+                contrib_in = e_hub.join(F.broadcast(w_hub), "src").unionByName(
+                    e_tail.join(w.hint("shuffle_hash"), "src")
+                )
+            else:
+                contrib_in = e.join(w.hint("shuffle_hash"), "src")
+            cexpr = F.col("w") * F.col("ew") if weight_col else F.col("w")
+            contribs = contrib_in.groupBy("dst").agg(_s(cexpr).alias("contrib"))
 
-        # `base` changes every iteration and is shipped as a plain literal:
-        # measured (tools A/B, round 2) the literal is ~0.2s/iter FASTER than
-        # the broadcast-1-row-relation alternative — the tiny broadcast job
-        # costs more than any codegen recompilation the changing literal
-        # causes on Spark 4.1.
-        base = (1.0 - d) / n + d * prev["dm"] / n
-        new_state = (
-            state.join(contribs.hint("shuffle_hash"), state.id == contribs.dst, "left")
-            .select(
-                "id",
-                "out_deg",
-                (F.lit(base) + d * F.coalesce(F.col("contrib"), F.lit(0.0))).alias("rank"),
-                F.col("rank").alias("pr"),
+            # `base` changes every iteration and is shipped as a plain literal:
+            # measured (tools A/B, round 2) the literal is ~0.2s/iter FASTER than
+            # the broadcast-1-row-relation alternative — the tiny broadcast job
+            # costs more than any codegen recompilation the changing literal
+            # causes on Spark 4.1.
+            base = (1.0 - d) / n + d * prev["dm"] / n
+            new_state = (
+                state.join(contribs.hint("shuffle_hash"), state.id == contribs.dst, "left")
+                .select(
+                    "id",
+                    "out_deg",
+                    (F.lit(base) + d * F.coalesce(F.col("contrib"), F.lit(0.0))).alias("rank"),
+                    F.col("rank").alias("pr"),
+                )
             )
+            # fused stats ride the materializing action (the kernel's
+            # Observation): L1 delta vs previous vector, next iteration's
+            # dangling mass, and total mass for the invariant check.
+            stats = {
+                "l1": _s(F.abs(F.col("rank") - F.col("pr"))),
+                "dm": _s(F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(0.0)),
+                "total": _s(F.col("rank")),
+            }
+            # `pr` exists only to feed the L1 delta, which the CollectMetrics
+            # node computes upstream — drop it from the committed state so the
+            # next iteration's join shuffle and the checkpoint ship 3 columns,
+            # not 4 (the U6 cogroup consumer passes with_prev=True and keeps the
+            # previous vector). Measured at 16M/local[8] (tools/ab_state_slim.py):
+            # -8% committed-state bytes, -3.3% steady-state iteration wall —
+            # modest because the row-cache per-row overhead, not the dropped
+            # double, dominates.
+            return new_state, stats, None if with_prev else ["id", "out_deg", "rank"]
+
+        loop = iterate(
+            step,
+            state,
+            start_iter,
+            total_iters,
+            name="pr_stats",
+            checkpointer=checkpointer,
+            every=checkpoint_interval,
+            scalars={"dm": dangling},
+            until=None if fixed_iters is not None else (lambda s, _: s["l1"] < tol),
+            record=lambda s: {
+                "l1_delta": s["l1"],
+                "dangling_mass": s["dm"],
+                "total_mass": s["total"],
+                "edges": float(n_edges),
+            },
         )
-        # fused stats ride the materializing action (the kernel's
-        # Observation): L1 delta vs previous vector, next iteration's
-        # dangling mass, and total mass for the invariant check.
-        stats = {
-            "l1": _s(F.abs(F.col("rank") - F.col("pr"))),
-            "dm": _s(F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(0.0)),
-            "total": _s(F.col("rank")),
+        state = loop.state
+        elapsed = time.monotonic() - t0
+        iters_run = len(loop.scalars)
+        info = {
+            "iters": start_iter + iters_run,
+            "iters_run": iters_run,
+            "n_vertices": n,
+            "n_edges": n_edges,
+            "deltas": [float(s["l1"]) for s in loop.scalars],
+            "iter_seconds": loop.iter_seconds,
+            "seconds": elapsed,
+            "edges_per_sec": (n_edges * iters_run / elapsed) if elapsed > 0 else float("nan"),
+            "hub_threshold": hub_threshold,
+            "n_hubs": n_hubs,
+            "hub_reason": hub_reason,
+            "num_partitions": p,
         }
-        # `pr` exists only to feed the L1 delta, which the CollectMetrics
-        # node computes upstream — drop it from the committed state so the
-        # next iteration's join shuffle and the checkpoint ship 3 columns,
-        # not 4 (the U6 cogroup consumer passes with_prev=True and keeps the
-        # previous vector). Measured at 16M/local[8] (tools/ab_state_slim.py):
-        # -8% committed-state bytes, -3.3% steady-state iteration wall —
-        # modest because the row-cache per-row overhead, not the dropped
-        # double, dominates.
-        return new_state, stats, None if with_prev else ["id", "out_deg", "rank"]
-
-    loop = iterate(
-        step,
-        state,
-        start_iter,
-        total_iters,
-        name="pr_stats",
-        checkpointer=checkpointer,
-        every=checkpoint_interval,
-        scalars={"dm": dangling},
-        until=None if fixed_iters is not None else (lambda s, _: s["l1"] < tol),
-        record=lambda s: {
-            "l1_delta": s["l1"],
-            "dangling_mass": s["dm"],
-            "total_mass": s["total"],
-            "edges": float(n_edges),
-        },
-    )
-    state = loop.state
-    elapsed = time.monotonic() - t0
-    iters_run = len(loop.scalars)
-    info = {
-        "iters": start_iter + iters_run,
-        "iters_run": iters_run,
-        "n_vertices": n,
-        "n_edges": n_edges,
-        "deltas": [float(s["l1"]) for s in loop.scalars],
-        "iter_seconds": loop.iter_seconds,
-        "seconds": elapsed,
-        "edges_per_sec": (n_edges * iters_run / elapsed) if elapsed > 0 else float("nan"),
-        "hub_threshold": hub_threshold,
-        "n_hubs": n_hubs,
-        "hub_reason": hub_reason,
-        "num_partitions": p,
-    }
-    # with_prev exposes the previous iteration's vector too (id, rank, pr) —
-    # the U6 cogroup consumer diffs consecutive snapshots without a join.
-    ranks = state.select("id", "rank", "pr") if with_prev else state.select("id", "rank")
-    e.unpersist()
-    verts.unpersist()
-    if hubs is not None:
-        hubs[0].unpersist()
-        hubs[1].unpersist()
-        hubs[2].unpersist()
-    return ranks, info
+        # with_prev exposes the previous iteration's vector too (id, rank, pr) —
+        # the U6 cogroup consumer diffs consecutive snapshots without a join.
+        ranks = state.select("id", "rank", "pr") if with_prev else state.select("id", "rank")
+        e.unpersist()
+        verts.unpersist()
+        if hubs is not None:
+            hubs[0].unpersist()
+            hubs[1].unpersist()
+            hubs[2].unpersist()
+        return back(ranks), info

@@ -17,10 +17,13 @@ S that are unreachable from S keep rank exactly 0.0.
 
 Scale notes: the per-iteration plan is global PageRank's (pagerank.py):
 the same edge cache, shuffled on src and sorted once up front (the sort
-pins the float-summation order, not the join), and the same two
+pins the float-summation order, not the join), the same two
 shuffled-hash joins built on the vertex-sized side — the rank/out_deg
-slice for the SpMV, contribs for the update (their build sizes, memory
-note and measurements are in pagerank.py's docstring); the seed set is
+slice for the SpMV, contribs for the update — and the same loop session
+at the cache's width with AQE off, so the state stays co-partitioned with
+the cache and the groupBy(dst) is a steady iteration's only Exchange
+(build sizes, memory note and measurements are in pagerank.py's
+docstring); the seed set is
 embedded as an `isin` literal filter — callers pass a HANDFUL to a
 few thousand seeds (the PPR use case); beyond ~100k seeds a broadcast-join
 teleport table would be the right form, and this function refuses rather
@@ -40,7 +43,7 @@ from pyspark.sql import functions as F
 
 from scalemine_spark.algorithms.pagerank import _prepare
 from scalemine_spark.checkpoint import CheckpointManager
-from scalemine_spark.iterate import iterate, resume
+from scalemine_spark.iterate import iterate, loop_session, resume
 
 _MAX_SEED_LITERALS = 100_000
 
@@ -66,77 +69,82 @@ def personalized_pagerank(
             f"({_MAX_SEED_LITERALS}); join a teleport table instead"
         )
 
-    spark = edges.sparkSession
-    e, verts, p = _prepare(edges, num_partitions)
+    from scalemine_spark.tuning import adaptive_partitions
 
-    def _s(col):  # sum, optionally in exact (associative) decimal
-        if exact_sums:
-            return F.sum(col.cast("decimal(38,18)")).cast("double")
-        return F.sum(col)
+    # the loop's own session at the edge cache's width, AQE off (pagerank)
+    p = num_partitions or adaptive_partitions(edges)
+    with loop_session(edges, p) as (edges, back):
+        spark = edges.sparkSession
+        e, verts, _ = _prepare(edges, p)
 
-    is_seed = F.col("id").isin(seeds)
-    n_seed = verts.filter(is_seed).count()
-    if n_seed == 0:
-        raise ValueError("none of the seeds exist in the graph")
-    tele = F.when(is_seed, F.lit(1.0 / n_seed)).otherwise(F.lit(0.0))
+        def _s(col):  # sum, optionally in exact (associative) decimal
+            if exact_sums:
+                return F.sum(col.cast("decimal(38,18)")).cast("double")
+            return F.sum(col)
 
-    stop = fixed_iters if fixed_iters is not None else max_iters
-    state, manifest, start_iter = resume(checkpointer, spark, stop)  # (id, out_deg, rank)
-    if state is None:
-        state = verts.select("id", "out_deg", tele.alias("rank")).localCheckpoint(
-            eager=True
-        )
-        scal = state.agg(
-            _s(F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(0.0)).alias("dm")
-        ).collect()[0]
-        dangling = float(scal["dm"] or 0.0)
-    else:
-        dangling = manifest["metrics"]["dm"]
+        is_seed = F.col("id").isin(seeds)
+        n_seed = verts.filter(is_seed).count()
+        if n_seed == 0:
+            raise ValueError("none of the seeds exist in the graph")
+        tele = F.when(is_seed, F.lit(1.0 / n_seed)).otherwise(F.lit(0.0))
 
-    def step(state, it, prev):
-        w = state.filter(F.col("out_deg") > 0).select(
-            F.col("id").alias("src"), (F.col("rank") / F.col("out_deg")).alias("w")
+        stop = fixed_iters if fixed_iters is not None else max_iters
+        state, manifest, start_iter = resume(checkpointer, spark, stop)  # (id, out_deg, rank)
+        if state is None:
+            state = verts.select("id", "out_deg", tele.alias("rank")).localCheckpoint(
+                eager=True
+            )
+            scal = state.agg(
+                _s(F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(0.0)).alias("dm")
+            ).collect()[0]
+            dangling = float(scal["dm"] or 0.0)
+        else:
+            dangling = manifest["metrics"]["dm"]
+
+        def step(state, it, prev):
+            w = state.filter(F.col("out_deg") > 0).select(
+                F.col("id").alias("src"), (F.col("rank") / F.col("out_deg")).alias("w")
+            )
+            contribs = (
+                e.join(w.hint("shuffle_hash"), "src")
+                .groupBy("dst")
+                .agg(_s(F.col("w")).alias("contrib"))
+            )
+            restart = (1.0 - d) + d * prev["dm"]  # mass returning to the seed set
+            new_state = state.join(
+                contribs.hint("shuffle_hash"), state.id == contribs.dst, "left"
+            ).select(
+                "id",
+                "out_deg",
+                (tele * F.lit(restart) + d * F.coalesce(F.col("contrib"), F.lit(0.0))).alias(
+                    "rank"
+                ),
+                F.col("rank").alias("pr"),
+            )
+            stats = {
+                "l1": _s(F.abs(F.col("rank") - F.col("pr"))),
+                "dm": _s(F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(0.0)),
+            }
+            return new_state, stats, ["id", "out_deg", "rank"]
+
+        t0 = time.monotonic()
+        loop = iterate(
+            step,
+            state,
+            start_iter,
+            stop,
+            name="ppr_stats",
+            checkpointer=checkpointer,
+            scalars={"dm": dangling},
+            until=None if fixed_iters is not None else (lambda s, _: s["l1"] < tol),
+            record=lambda s: {"dm": s["dm"], "l1_delta": s["l1"]},
         )
-        contribs = (
-            e.join(w.hint("shuffle_hash"), "src")
-            .groupBy("dst")
-            .agg(_s(F.col("w")).alias("contrib"))
-        )
-        restart = (1.0 - d) + d * prev["dm"]  # mass returning to the seed set
-        new_state = state.join(
-            contribs.hint("shuffle_hash"), state.id == contribs.dst, "left"
-        ).select(
-            "id",
-            "out_deg",
-            (tele * F.lit(restart) + d * F.coalesce(F.col("contrib"), F.lit(0.0))).alias(
-                "rank"
-            ),
-            F.col("rank").alias("pr"),
-        )
-        stats = {
-            "l1": _s(F.abs(F.col("rank") - F.col("pr"))),
-            "dm": _s(F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(0.0)),
+        info = {
+            "iters_run": len(loop.scalars),
+            "deltas": [float(s["l1"]) for s in loop.scalars],
+            "n_seeds": n_seed,
+            "seconds": time.monotonic() - t0,
         }
-        return new_state, stats, ["id", "out_deg", "rank"]
-
-    t0 = time.monotonic()
-    loop = iterate(
-        step,
-        state,
-        start_iter,
-        stop,
-        name="ppr_stats",
-        checkpointer=checkpointer,
-        scalars={"dm": dangling},
-        until=None if fixed_iters is not None else (lambda s, _: s["l1"] < tol),
-        record=lambda s: {"dm": s["dm"], "l1_delta": s["l1"]},
-    )
-    info = {
-        "iters_run": len(loop.scalars),
-        "deltas": [float(s["l1"]) for s in loop.scalars],
-        "n_seeds": n_seed,
-        "seconds": time.monotonic() - t0,
-    }
-    e.unpersist()
-    verts.unpersist()
-    return loop.state.select("id", "rank"), info
+        e.unpersist()
+        verts.unpersist()
+        return back(loop.state.select("id", "rank")), info

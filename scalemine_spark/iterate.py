@@ -19,12 +19,28 @@ a SUM over zero rows) are then amended into the committed manifest with
 `iter_seconds` — commit first, so manifests go v0 then v1 — and
 `until(scalars, prev)` may stop the loop. The last publish is flushed
 before `iterate` returns.
+
+A loop runs in its own session (`loop_session`): `spark.newSession()`
+shares the SparkContext, the cache and the global temp views but has its
+own SQL conf, so a loop may set conf without any other query on the
+caller's session seeing it. The child starts from a copy of the caller's
+runtime conf; a loop owns only what it overrides. Pagerank, ppr and
+labelprop own their width (`spark.sql.shuffle.partitions` = the edge
+cache's `p`) with AQE off: the committed state then keeps
+`hashpartitioning(id, p)` across `localCheckpoint`, co-partitioned with
+the edge cache, so a steady iteration exchanges no state and no edges
+(under AQE, localCheckpoint hands the state back with UnknownPartitioning).
+Connected components owns its per-round width under the caller's AQE.
+HITS stays in the caller's session: at 16M edges its steady iteration was
+slower in a child session (BENCH/holdout_pr11.json).
 """
 
 from __future__ import annotations
 
 import time
-from collections.abc import Callable
+import uuid
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -37,6 +53,46 @@ class Loop(NamedTuple):
     scalars: list[dict]  # observed, one dict per iteration run
     iter_seconds: list[float]  # from building the step to after the amend
     stopped: bool  # `until` ended the loop
+
+
+@contextmanager
+def loop_session(
+    frame: DataFrame, width: int | None = None
+) -> Iterator[tuple[DataFrame, Callable[[DataFrame], DataFrame]]]:
+    """Yields `(frame, back)`: `frame` re-read in a child session of its
+    own, and `back(df)`, which hands a child frame to the caller's session
+    (module docstring). The child copies the caller's runtime conf; with
+    `width` it also runs AQE off at `spark.sql.shuffle.partitions = width`.
+    Frames cross through uniquely named global temp views, dropped on exit.
+    The child is never stopped: that would stop the shared SparkContext."""
+    caller = frame.sparkSession
+    child = caller.newSession()
+    # the child inherits the builder's conf, not the caller's later sets
+    mine, theirs = caller.conf.getAll, child.conf.getAll
+    for k in theirs.keys() - mine.keys():
+        child.conf.unset(k)
+    for k, v in mine.items():
+        if theirs.get(k) != v:
+            child.conf.set(k, v)
+    if width is not None:
+        child.conf.set("spark.sql.adaptive.enabled", "false")
+        child.conf.set("spark.sql.shuffle.partitions", str(width))
+    db = caller.conf.get("spark.sql.globalTempDatabase")
+    views = []
+
+    def route(df: DataFrame, to: SparkSession) -> DataFrame:
+        views.append(f"loop_{uuid.uuid4().hex}")
+        df.createOrReplaceGlobalTempView(views[-1])
+        return to.table(f"{db}.{views[-1]}")
+
+    try:
+        yield route(frame, child), lambda df: route(df, caller)
+    finally:
+        # the catalog's dropGlobalTempView would also uncache the view's
+        # plan, which is the caller's input: drop the name only
+        catalog = caller._jsparkSession.sessionState().catalog()
+        for name in views:
+            catalog.dropGlobalTempView(name)
 
 
 def resume(

@@ -31,8 +31,9 @@ from pyspark.sql import DataFrame
 # at 2M edges the derivation must land at defaultParallelism (0.92 ->
 # 0.67 s/iter measured, tools/profile_iter_r6.py), and by ~16M edges it
 # should be back at the session width — the 16M-edge holdout
-# (tools/ab_scale_r6.py, order-swapped pairs to cancel first-position
-# warm-up bias) measured parity with the pinned session width there.
+# (order-swapped pairs to cancel first-position warm-up bias,
+# BENCH/ab_scale_r6_4mb.json) measured parity with the pinned session
+# width there; `tools/ab.py --holdout` re-runs that graph.
 # Conservative by design: the narrow window only covers scales where the
 # per-task fixed cost demonstrably dominates. Misestimation moves the
 # clamp, never correctness.

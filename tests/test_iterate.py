@@ -20,7 +20,7 @@ from scalemine_spark.algorithms import (
     random_walks,
 )
 from scalemine_spark.checkpoint import CheckpointManager
-from scalemine_spark.iterate import iterate, resume
+from scalemine_spark.iterate import iterate, loop_session, resume
 from tests.conftest import edges_df
 
 
@@ -194,3 +194,58 @@ def test_one_spark_job_per_iteration(spark, algo):
         for k, v in saved.items():
             spark.conf.set(k, v)
     assert jobs[1] - jobs[0] == 1, jobs
+
+
+@pytest.mark.parametrize("algo", sorted(_RUNS))
+def test_loops_leave_the_callers_session_as_it_was(spark, monkeypatch, algo):
+    """No loop changes the caller's conf, not even while it runs (where a
+    concurrent query on the caller's session would see it): the conf is
+    identical before, during every iteration and after the call, the
+    result is a frame of the caller's session, and no global temp view the
+    loop routed its frames through is left behind. A persisted input stays
+    cached."""
+    import scalemine_spark.iterate as kernel
+
+    e = edges_df(spark, _GRAPHS.get(algo, FX.g_karate_like())).persist()
+    e.count()
+    level = e.storageLevel
+    db = spark.conf.get("spark.sql.globalTempDatabase")
+    before = spark.conf.getAll
+    during = []
+    materialize = kernel.materialize
+
+    def spy(*a, **kw):
+        during.append(spark.conf.getAll)
+        return materialize(*a, **kw)
+
+    monkeypatch.setattr(kernel, "materialize", spy)
+    out, _ = _RUNS[algo](e, 2)
+    assert during and all(conf == before for conf in during)
+    assert spark.conf.getAll == before
+    assert out.sparkSession is spark
+    assert out.count() > 0
+    assert [t.name for t in spark.catalog.listTables(db) if t.database == db] == []
+    assert e.storageLevel == level and level.useMemory
+    e.unpersist()
+
+
+def test_loop_session_copies_the_callers_runtime_conf(spark):
+    """The child starts from the caller's runtime conf, set after the
+    session was built, and overrides only the loop's width and AQE."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        before = spark.conf.getAll
+        with loop_session(spark.range(5), 3) as (df, back):
+            child = df.sparkSession
+            assert child is not spark
+            assert child.conf.get(key) == "-1"
+            assert child.conf.get("spark.sql.shuffle.partitions") == "3"
+            assert child.conf.get("spark.sql.adaptive.enabled") == "false"
+            out = back(df.selectExpr("id * 2 AS v"))
+        assert spark.conf.getAll == before
+        assert out.sparkSession is spark
+        assert sorted(r["v"] for r in out.collect()) == [0, 2, 4, 6, 8]
+    finally:
+        spark.conf.set(key, saved)

@@ -18,20 +18,84 @@ def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
-def _outside_caches(plan: str) -> list[str]:
-    """The plan's lines minus every InMemoryRelation's subtree (the cache's
-    own build plan, re-printed under the relation; by indentation)."""
-    out, cache_depth = [], None
-    for ln in plan.splitlines():
-        depth = len(ln) - len(ln.lstrip(" :+-"))
-        if cache_depth is not None:
-            if depth > cache_depth:
-                continue
-            cache_depth = None
-        if "InMemoryRelation" in ln:
-            cache_depth = depth
-        out.append(ln)
+def _outside_caches(df) -> list[str]:
+    """One line per node of the executed plan (the final plan under AQE),
+    indented three spaces per depth, minus every cache's own build plan.
+    Walks the plan's children: an InMemoryTableScan is a leaf whose cached
+    relation is an inner child, so the walk skips each cache however deeply
+    one cache is built from another. (Cutting the printed plan by
+    indentation failed there: a nested AdaptiveSparkPlan prints its
+    `== Final Plan ==` header and body shallower than the InMemoryRelation
+    above it.)"""
+    out, todo = [], [(df._jdf.queryExecution().executedPlan(), 0)]
+    while todo:
+        node, depth = todo.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":  # its current (final once run) plan
+            todo.append((node.executedPlan(), depth))
+            continue
+        if name.endswith("QueryStage"):  # a stage wraps its exchange
+            todo.append((node.plan(), depth))
+            continue
+        out.append("   " * depth + node.simpleString(100))
+        kids = node.children()
+        todo.extend((kids.apply(i), depth + 1) for i in reversed(range(kids.size())))
     return out
+
+
+def _fed_through_exchange(lines: list[str], leaf: str) -> bool:
+    """Whether an Exchange sits between a `leaf` line and the nearest join
+    above it, in `_outside_caches` lines."""
+    for i, ln in enumerate(lines):
+        if not ln.lstrip().startswith(leaf):
+            continue
+        depth = len(ln) - len(ln.lstrip())
+        for up in reversed(lines[:i]):
+            d = len(up) - len(up.lstrip())
+            if d < depth:  # the parent
+                depth = d
+                if "Join" in up:
+                    break
+                if up.lstrip().startswith("Exchange"):
+                    return True
+    return False
+
+
+def test_outside_caches_skips_a_cache_built_from_a_cache(spark):
+    """Pagerank's hub-split SpMV shape under the session's AQE: the hub and
+    tail edge caches are built from the sorted edge cache, and the step
+    unions a broadcast join on one with a shuffled-hash join on the other.
+    None of the three caches' build plans is left in the lines, and the
+    tail join is (cutting the printed plan by indentation kept 40 build
+    lines and dropped the tail join)."""
+    e = spark.range(2000).select(
+        (F.col("id") % 100).alias("src"), (F.col("id") % 37).alias("dst")
+    )
+    e = e.repartition(8, "src").sortWithinPartitions("src").persist()
+    hub_ids = spark.range(3).persist()
+    e_hub = e.join(F.broadcast(hub_ids), e.src == hub_ids.id, "left_semi").persist()
+    e_tail = e.join(F.broadcast(hub_ids), e.src == hub_ids.id, "left_anti").persist()
+    caches = (e, hub_ids, e_hub, e_tail)
+    try:
+        for c in caches:
+            c.count()
+        w = spark.range(100).select(F.col("id").alias("src"), (F.col("id") / 3).alias("w"))
+        w = w.localCheckpoint()
+        q = (
+            e_hub.join(F.broadcast(w), "src")
+            .unionByName(e_tail.join(w.hint("shuffle_hash"), "src"))
+            .groupBy("dst")
+            .agg(F.sum("w"))
+        )
+        q.collect()
+        lines = _outside_caches(q)
+        assert sum("InMemoryTableScan" in ln for ln in lines) == 2, lines
+        assert sum("ShuffledHashJoin" in ln for ln in lines) == 1, lines
+        build = ("REPARTITION_BY_NUM", "LeftSemi", "LeftAnti", "Sort ", "Plan ==", "InMemoryRelation")
+        assert not any(b in ln for ln in lines for b in build), lines
+    finally:
+        for c in caches:
+            c.unpersist()
 
 
 def test_html_column_pruned_for_metadata_query(spark, pages_small):
@@ -130,18 +194,18 @@ def test_cc_round_exchange_budget(spark):
     )
     out, ls = _cc_round(e)
 
-    def exchanges_outside_cache(plan: str) -> int:
+    def exchanges_outside_cache(df) -> int:
         """Count Exchange nodes excluding the cached large-star subtree —
         InMemoryTableScan re-prints the cached plan per consumer, so a flat
         count would double-count it."""
         return sum(
             "Exchange hashpartitioning" in ln and "ReusedExchange" not in ln
-            for ln in _outside_caches(plan)
+            for ln in _outside_caches(df)
         )
 
     # small-star segment (everything above the cached large-star relation):
     # probe exchange + partial-agg exchange + distinct exchange = 3
-    assert exchanges_outside_cache(_plan(out)) <= 3, _plan(out)
+    assert exchanges_outside_cache(out) <= 3, _plan(out)
     ls.unpersist()
 
 
@@ -239,40 +303,96 @@ def test_fsm_never_plans_a_cartesian_or_nested_loop(spark):
     assert semi, plan
 
 
-def test_pagerank_steady_iteration_is_two_shuffled_hash_joins(spark, monkeypatch):
-    """The SpMV join (edge cache ⋈ rank/out_deg) and the state update join
-    (state ⋈ contribs) of a steady pagerank and ppr iteration are both
-    shuffled-hash joins built on the vertex-sized side, under the session's
-    own AQE: no sort-merge join, no Sort above the edge cache and no
-    broadcast of it (the planner broadcast the whole edge table each
-    iteration while it was under the auto-broadcast threshold)."""
+def _steady_plans(monkeypatch, runs) -> list:
+    """The last iteration's frame of each run, executed (so an AQE plan is
+    final), caught at the kernel's materialize."""
     import scalemine_spark.iterate as kernel
-    from scalemine_spark import fixtures as FX
-    from scalemine_spark.algorithms import pagerank, personalized_pagerank
-    from tests.conftest import edges_df
 
     frames = []
     materialize = kernel.materialize
 
     def spy(frame, it, checkpointer=None, metrics=None):
         out = materialize(frame, it, checkpointer, metrics)
-        frames.append(frame)  # executed now: AQE's final plan is fixed
+        frames.append(frame)
         return out
 
     monkeypatch.setattr(kernel, "materialize", spy)
-    e = edges_df(spark, FX.g_karate_like())
-    for run in (
-        lambda: pagerank(e, fixed_iters=3),
-        lambda: personalized_pagerank(e, [0, 1], fixed_iters=3),
-    ):
+    last = []
+    for run in runs:
         frames.clear()
         run()
-        plan = _plan(frames[-1])
-        lines = _outside_caches(plan)
-        final = lines[: next(i for i, ln in enumerate(lines) if "== Initial Plan ==" in ln)]
+        last.append(frames[-1])
+    return last
+
+
+def test_pagerank_steady_iteration_is_two_shuffled_hash_joins(spark, monkeypatch):
+    """The SpMV join (edge cache ⋈ rank/out_deg) and the state update join
+    (state ⋈ contribs) of a steady pagerank and ppr iteration are both
+    shuffled-hash joins built on the vertex-sized side: no sort-merge join,
+    no Sort above the edge cache and no broadcast of it (the planner
+    broadcast the whole edge table each iteration while it was under the
+    auto-broadcast threshold). The loop runs in its own session at the
+    edge cache's width with AQE off, so the committed state stays
+    co-partitioned with the cache: the step's only Exchange is the
+    V-sized partial-aggregate groupBy(dst), none feeds a join from the
+    state's scan or the edge cache's, also at a width other than the
+    caller's (where the edge cache used to be re-shuffled every iteration)."""
+    from scalemine_spark import fixtures as FX
+    from scalemine_spark.algorithms import pagerank, personalized_pagerank
+    from tests.conftest import edges_df
+
+    e = edges_df(spark, FX.g_karate_like())
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    frames = _steady_plans(
+        monkeypatch,
+        [
+            lambda: pagerank(e, fixed_iters=3),
+            lambda: personalized_pagerank(e, [0, 1], fixed_iters=3),
+            lambda: pagerank(e, fixed_iters=3, num_partitions=width // 2),
+            lambda: personalized_pagerank(e, [0, 1], fixed_iters=3, num_partitions=width // 2),
+        ],
+    )
+    for frame in frames:
+        plan = _plan(frame)
+        lines = _outside_caches(frame)
         # both joins build their right side: the rank/out_deg slice, contribs
-        shj = [ln for ln in final if "ShuffledHashJoin" in ln]
+        shj = [ln for ln in lines if "ShuffledHashJoin" in ln]
         assert len(shj) == 2 and all("BuildRight" in ln for ln in shj), plan
         assert not any("SortMergeJoin" in ln for ln in lines), plan
-        assert not any(ln.lstrip(" :+-*()0123456789").startswith("Sort ") for ln in lines), plan
+        assert not any(ln.lstrip().startswith("Sort ") for ln in lines), plan
         assert not any("Broadcast" in ln for ln in lines), plan
+        exchanges = [ln.strip() for ln in lines if ln.lstrip().startswith("Exchange")]
+        assert len(exchanges) == 1 and "hashpartitioning(dst" in exchanges[0], plan
+        assert not _fed_through_exchange(lines, "Scan ExistingRDD"), plan
+        assert not _fed_through_exchange(lines, "InMemoryTableScan"), plan
+
+
+def test_labelprop_steady_iteration_broadcasts_nothing(spark, monkeypatch):
+    """A steady LPA iteration joins the symmetrized edge cache with the
+    labels and the labels with the new labels as shuffled-hash joins built
+    on the vertex side, in its own session at the cache's width with AQE
+    off: no broadcast of the 2E cache (the AQE-off planner broadcast it),
+    no sort-merge join, and no Exchange on the labels' or the cache's way
+    into a join. Its two Exchanges are the (id, label) and id aggregates."""
+    from scalemine_spark import fixtures as FX
+    from scalemine_spark.algorithms import label_propagation
+    from tests.conftest import edges_df
+
+    e = edges_df(spark, FX.g_karate_like())
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    frames = _steady_plans(
+        monkeypatch,
+        [
+            lambda: label_propagation(e, iters=3),
+            lambda: label_propagation(e, iters=3, num_partitions=width // 2),
+        ],
+    )
+    for frame in frames:
+        plan = _plan(frame)
+        lines = _outside_caches(frame)
+        shj = [ln for ln in lines if "ShuffledHashJoin" in ln]
+        assert len(shj) == 2 and all("BuildRight" in ln for ln in shj), plan
+        assert not any("SortMergeJoin" in ln or "Broadcast" in ln for ln in lines), plan
+        assert sum(ln.lstrip().startswith("Exchange") for ln in lines) == 2, plan
+        assert not _fed_through_exchange(lines, "Scan ExistingRDD"), plan
+        assert not _fed_through_exchange(lines, "InMemoryTableScan"), plan

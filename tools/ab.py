@@ -21,6 +21,16 @@ each run's ``diag`` line (pass times, load, CPU steal) included.
 An export rather than a ``git worktree``: it leaves nothing in the
 repository's ``.git`` when a run is interrupted. Each tree keeps its own
 ``.perfbench_work/`` inputs, generated outside the timed metrics.
+
+    python3 tools/ab.py --holdout [--ref HEAD] [--pairs 3] [--out BENCH/holdout_<name>.json]
+
+``--holdout`` runs the scale holdout instead of the benchmark, in the same
+interleaved, order-swapped pairs: one process per tree and pair (4 cores,
+8 shuffle partitions, 6g driver heap) generates the 16M-edge power-law
+graph of ``fixtures.synth_edges_distributed`` (1.6M vertices, seed 42),
+then times ``pagerank(fixed_iters=6)`` (its steady iteration is the median
+of iterations 2-5), ``label_propagation(iters=2)`` and ``hits(iters=2)``,
+each through an aggregate over its result. A pair takes about 5 minutes.
 """
 
 from __future__ import annotations
@@ -69,6 +79,58 @@ def run_once(tree: str, workload: str, seed: int) -> dict:
     }
 
 
+HOLDOUT_EDGES = 16_000_000
+
+
+def holdout_child() -> dict:
+    """One holdout measurement of the tree in the working directory."""
+    sys.path.insert(0, os.getcwd())
+    from pyspark.sql import functions as F
+
+    from scalemine_spark.algorithms import hits, label_propagation, pagerank
+    from scalemine_spark.fixtures import synth_edges_distributed
+    from scalemine_spark.session import get_spark
+    from scalemine_spark.tuning import adaptive_partitions
+
+    spark = get_spark("ab-holdout", cores=4, shuffle_partitions=8)
+    spark.sparkContext.setLogLevel("ERROR")
+    edges = synth_edges_distributed(spark, HOLDOUT_EDGES, HOLDOUT_EDGES // 10, seed=42)
+    edges = edges.persist()
+    diag = {"n_edges": edges.count(), "p": adaptive_partitions(edges)}
+    metrics = {}
+
+    t0 = time.monotonic()
+    ranks, info = pagerank(edges, fixed_iters=6)
+    diag["rank_sum"] = ranks.agg(F.sum("rank")).collect()[0][0]
+    metrics["pagerank_s"] = time.monotonic() - t0
+    metrics["pagerank_steady_s"] = statistics.median(info["iter_seconds"][2:])
+    diag["pagerank_iter_s"] = info["iter_seconds"]
+
+    t0 = time.monotonic()
+    labels, _ = label_propagation(edges, iters=2)
+    diag["labels"] = labels.agg(F.countDistinct("label")).collect()[0][0]
+    metrics["labelprop_s"] = time.monotonic() - t0
+
+    t0 = time.monotonic()
+    scores, info = hits(edges, iters=2)
+    diag["auth_sum"] = scores.agg(F.sum("auth")).collect()[0][0]
+    metrics["hits_s"] = time.monotonic() - t0
+    diag["hits_iter_s"] = info["iter_seconds"]
+    spark.stop()
+    ok = abs(diag["rank_sum"] - 1.0) <= 1e-6
+    return {"correct": ok, "metrics": metrics, "diag": diag}
+
+
+def run_holdout(tree: str) -> dict:
+    cmd = [sys.executable, os.path.abspath(__file__), "--holdout-child"]
+    env = {**os.environ, "SPARK_DRIVER_MEMORY": "6g"}
+    proc = subprocess.run(cmd, cwd=tree, env=env, capture_output=True, text=True, timeout=1800)
+    lines = proc.stdout.strip().splitlines()
+    if proc.returncode != 0 or not lines:
+        raise RuntimeError(f"holdout in {tree} exited {proc.returncode}: {proc.stderr[-2000:]}")
+    return json.loads(lines[-1])
+
+
 def _quartile_spread(values: list[float]) -> float:
     if len(values) < 2:
         return 0.0
@@ -103,13 +165,20 @@ def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--ref", default="HEAD")
     ap.add_argument("--workloads", default="ingest,iterate,durable")
-    ap.add_argument("--pairs", type=int, default=10)
+    ap.add_argument("--pairs", type=int, help="default 10, 3 with --holdout")
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--out")
+    ap.add_argument("--holdout", action="store_true", help="the 16M-edge scale holdout")
+    ap.add_argument("--holdout-child", action="store_true", help=argparse.SUPPRESS)
     args = ap.parse_args(argv)
+    if args.holdout_child:
+        print(json.dumps(holdout_child()), flush=True)
+        return 0
+    if args.pairs is None:
+        args.pairs = 3 if args.holdout else 10
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
         better = {m["name"]: m["better"] for m in json.load(fh)["end_to_end"]}
-    workloads = args.workloads.split(",")
+    workloads = ["holdout"] if args.holdout else args.workloads.split(",")
 
     ref_tree = tempfile.mkdtemp(prefix="scalemine-ab-")
     runs: list[dict] = []
@@ -122,7 +191,10 @@ def main(argv=None) -> int:
                 rec = {"pair": i, "workload": wl, "order": list(order)}
                 for side in order:
                     tree = ref_tree if side == "ref" else ROOT
-                    rec[side] = run_once(tree, wl, args.seed)
+                    if args.holdout:
+                        rec[side] = run_holdout(tree)
+                    else:
+                        rec[side] = run_once(tree, wl, args.seed)
                 runs.append(rec)
                 cells = "  ".join(
                     f"{m} {rec['ref']['metrics'][m]:.4g}->{rec['work']['metrics'][m]:.4g}"
