@@ -108,7 +108,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from scalemine_spark.checkpoint import CheckpointManager
+from scalemine_spark.graph import vertex_ids
 from scalemine_spark.iterate import iterate, loop_session, resume
+from scalemine_spark.tuning import adaptive_partitions
 
 
 def _unionfind_numpy(u, v):
@@ -127,12 +129,12 @@ def _unionfind_numpy(u, v):
     The round-5 profile that motivated this: on the 60M-edge protocol
     graph (one giant component, 6M pointer rows) the un-contracted version
     re-scanned all 6M edges for all ~21 passes — 113 s inside the endgame;
-    contraction solves the identical input in ~2 s
-    (tools/profile_cc_endgame.py). Tolerates duplicate edges and
-    self-loops; correctness: labels only decrease, never below the
-    component min id, and the min id keeps its own label, so termination
-    (no cross-label edges left) leaves every vertex exactly at its
-    component's min id."""
+    contraction solves the identical input in ~2 s (commit 884911b;
+    BENCH/scaling_cc.md has the 60M-edge runs after it). Tolerates
+    duplicate edges and self-loops; correctness: labels only decrease,
+    never below the component min id, and the min id keeps its own label,
+    so termination (no cross-label edges left) leaves every vertex exactly
+    at its component's min id."""
     import numpy as np
 
     # one argsort-based pass gives BOTH the sorted unique id table and the
@@ -240,7 +242,6 @@ def connected_components(
     edges: DataFrame,
     max_rounds: int = 50,
     checkpointer: CheckpointManager | None = None,
-    num_partitions: int | None = None,
     endgame_rows: int = 1 << 23,
 ) -> tuple[DataFrame, dict]:
     """Returns (components DF (id, comp) with comp = min id of the component,
@@ -251,12 +252,10 @@ def connected_components(
     disables. Size it to driver memory: rows * 16 bytes must fit
     comfortably (default 8M rows = ~128 MB)."""
     # scale-adaptive round-0 width and tail-coalescing cap (round 6, guide
-    # §2) — same derivation and rationale as pagerank._prepare / tuning.py;
-    # the tail rounds already re-derived their width from observed rows,
-    # this extends the same idea to round 0 via the input size estimate
-    from scalemine_spark.tuning import adaptive_partitions
-
-    p = num_partitions or adaptive_partitions(edges)
+    # §2; tuning.py docstring): the tail rounds already re-derived their
+    # width from observed rows, this extends the same idea to round 0 via
+    # the input size estimate
+    p = adaptive_partitions(edges)
     # the rounds set their width on the loop's own session, under the
     # caller's AQE (iterate.loop_session): no other query sees it
     with loop_session(edges) as (edges, back):
@@ -267,12 +266,7 @@ def connected_components(
         # post-distinct repartition was a pure extra V-sized exchange — the
         # distinct's own hash(id) output partitioning serves the join as-is
         # (round 6, guide §2.4)
-        verts = (
-            edges.select(F.col("src").alias("id"))
-            .union(edges.select(F.col("dst").alias("id")))
-            .distinct()
-            .persist()
-        )
+        verts = vertex_ids(edges).persist()
 
         # canonicalized raw pairs, duplicates and all — round 0 absorbs them
         # (no init distinct, no init fingerprint: both were full-E passes)

@@ -35,14 +35,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from scalemine_spark.checkpoint import CheckpointManager
+from scalemine_spark.graph import vertex_ids
 from scalemine_spark.iterate import iterate, resume
+from scalemine_spark.tuning import adaptive_partitions
 
 
 def hits(
     edges: DataFrame,
     iters: int = 8,
     checkpointer: CheckpointManager | None = None,
-    num_partitions: int | None = None,
     exact_sums: bool = False,
 ) -> tuple[DataFrame, dict]:
     """Returns (scores DF (id, auth, hub) L1-normalized, info).
@@ -64,14 +65,11 @@ def hits(
     the score contract is allclose 1e-6, which double sums meet; the
     default replay contract is allclose 1e-12 (ulp-level merge jitter).
     """
-    from scalemine_spark.tuning import adaptive_partitions
-
     if iters < 1:
         raise ValueError("iters must be >= 1")
     spark = edges.sparkSession
-    # scale-adaptive loop width (round 6, guide §2) — same derivation and
-    # rationale as pagerank._prepare / tuning.py module docstring
-    p = num_partitions or adaptive_partitions(edges)
+    # scale-adaptive loop width (round 6, guide §2; tuning.py docstring)
+    p = adaptive_partitions(edges)
 
     def _s(col):  # sum, optionally in exact (associative) decimal
         if exact_sums:
@@ -87,13 +85,7 @@ def hits(
     e = edges.select("src", "dst")
     e_by_src = e.repartition(p, "src").sortWithinPartitions("src", "dst").persist()
     e_by_dst = e.repartition(p, "dst").sortWithinPartitions("dst", "src").persist()
-    verts = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .repartition(p, "id")
-        .persist()
-    )
+    verts = vertex_ids(e).repartition(p, "id").persist()
 
     state, manifest, start = resume(checkpointer, spark, iters)
     a_mats: list[DataFrame] = []  # the live auth half-step cache
@@ -122,8 +114,8 @@ def hits(
         # once even with two consumers inside one job (the components.py
         # large-star rule), so the whole iteration — both half-steps — runs
         # as ONE materializing Spark job instead of two. Measured round 6
-        # (bench_extra, warm rep at 2M edges/local[32], together with the
-        # adaptive loop width): hits4 7.4s -> 5.8s.
+        # (warm rep at 2M edges/local[32], together with the adaptive loop
+        # width, OPTIMIZATION_r06.md): hits4 7.4s -> 5.8s.
         a_mat = a_raw.persist()
         a_mats.append(a_mat)
 

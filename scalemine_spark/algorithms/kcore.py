@@ -43,15 +43,13 @@ def kcore(
     k: int,
     max_peels: int = 64,
     checkpointer: CheckpointManager | None = None,
-    num_partitions: int | None = None,
 ) -> tuple[DataFrame, dict]:
     """Returns (core DF (id, core_deg), info)."""
     if k < 1:
         raise ValueError("k must be >= 1")
     spark = edges.sparkSession
-    # scale-adaptive loop width (round 6, guide §2) — same derivation and
-    # rationale as pagerank._prepare / tuning.py module docstring
-    p = num_partitions or adaptive_partitions(edges)
+    # scale-adaptive loop width (round 6, guide §2; tuning.py docstring)
+    p = adaptive_partitions(edges)
 
     # undirected simple edge set, canonical (lo, hi) orientation
     und = (

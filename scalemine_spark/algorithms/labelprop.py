@@ -22,7 +22,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from scalemine_spark.checkpoint import CheckpointManager
+from scalemine_spark.graph import vertex_ids
 from scalemine_spark.iterate import iterate, loop_session, resume
+from scalemine_spark.tuning import adaptive_partitions
 
 
 def label_propagation(
@@ -30,16 +32,13 @@ def label_propagation(
     iters: int | None = None,
     max_iters: int = 20,
     checkpointer: CheckpointManager | None = None,
-    num_partitions: int | None = None,
 ) -> tuple[DataFrame, dict]:
     """Returns (labels DF (id, label), info). iters=None -> run to fixpoint
     (bounded by max_iters); iters=k -> exactly k synchronous iterations."""
-    from scalemine_spark.tuning import adaptive_partitions
-
-    # scale-adaptive loop width (round 6, guide §2) — same derivation and
-    # rationale as pagerank._prepare / tuning.py module docstring; the loop
-    # runs in its own session at that width, AQE off (iterate.loop_session)
-    p = num_partitions or adaptive_partitions(edges)
+    # scale-adaptive loop width (round 6, guide §2; tuning.py docstring);
+    # the loop runs in its own session at that width, AQE off
+    # (iterate.loop_session)
+    p = adaptive_partitions(edges)
     with loop_session(edges, p) as (edges, back):
         spark = edges.sparkSession
 
@@ -64,13 +63,7 @@ def label_propagation(
         # vertices come from the RAW edge endpoints (not sym, which drops
         # self-loops): a vertex appearing only in self-loop edges still exists and
         # keeps its own label throughout — consistent with pagerank / components.
-        verts = (
-            edges.select(F.col("src").alias("id"))
-            .union(edges.select(F.col("dst").alias("id")))
-            .distinct()
-            .repartition(p, "id")
-            .persist()
-        )
+        verts = vertex_ids(edges).repartition(p, "id").persist()
 
         stop = iters if iters is not None else max_iters
         labels, _, start = resume(checkpointer, spark, stop)

@@ -47,24 +47,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from scalemine_spark.checkpoint import CheckpointManager
+from scalemine_spark.graph import vertex_ids
 from scalemine_spark.iterate import iterate, materialize, resume
 from scalemine_spark.tuning import adaptive_partitions
-
-
-def _verts(e: DataFrame, p: int) -> DataFrame:
-    return (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .repartition(p, "id")
-        .persist()
-    )
 
 
 def neighborhood_function(
     edges: DataFrame,
     max_t: int = 3,
-    num_partitions: int | None = None,
 ) -> tuple[DataFrame, dict]:
     """Exact neighborhood function: DataFrame (t, n_pairs) for t = 0..max_t,
     n_pairs = #(root, v) ordered pairs with directed dist(root, v) ≤ t
@@ -76,16 +66,15 @@ def neighborhood_function(
     is one kernel iteration (iterate.py); t = 0 materializes the self-pairs.
     """
     spark = edges.sparkSession
-    # scale-adaptive loop width (round 6, guide §2) — same derivation and
-    # rationale as pagerank._prepare / tuning.py module docstring
-    p = num_partitions or adaptive_partitions(edges)
+    # scale-adaptive loop width (round 6, guide §2; tuning.py docstring)
+    p = adaptive_partitions(edges)
     e = (
         edges.select("src", "dst")
         .repartition(p, "src")
         .sortWithinPartitions("src")
         .persist()
     )
-    verts = _verts(e, p)
+    verts = vertex_ids(e).repartition(p, "id").persist()
 
     def step(reach, t, prev):
         if reach is None:  # t = 0: the self-pairs, N(0) = |V|
@@ -192,7 +181,6 @@ def hyperball(
     max_t: int = 3,
     m: int = 16,
     checkpointer: CheckpointManager | None = None,
-    num_partitions: int | None = None,
 ) -> tuple[DataFrame, dict]:
     """HyperBall: per-vertex out-ball-size HLL estimates after max_t rounds.
 
@@ -205,16 +193,15 @@ def hyperball(
     Resume: the committed per-round state is the (id, regs) table.
     """
     spark = edges.sparkSession
-    # scale-adaptive loop width (round 6, guide §2) — same derivation and
-    # rationale as pagerank._prepare / tuning.py module docstring
-    p = num_partitions or adaptive_partitions(edges)
+    # scale-adaptive loop width (round 6, guide §2; tuning.py docstring)
+    p = adaptive_partitions(edges)
     e = (
         edges.select("src", "dst")
         .repartition(p, "dst")
         .sortWithinPartitions("dst")
         .persist()
     )
-    verts = _verts(e, p)
+    verts = vertex_ids(e).repartition(p, "id").persist()
 
     state, _, start = resume(checkpointer, spark, max_t + 1)
     if state is not None:

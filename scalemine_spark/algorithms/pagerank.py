@@ -42,10 +42,10 @@ Scale design:
   * edges are repartitioned on src once and persisted; the per-iteration join
     reuses that partitioning (no re-shuffle of the big side per iteration).
 
-Iteration control — resume, commit every `checkpoint_interval` iterations
-(write-behind), lineage truncation, one materializing job with the L1
-delta, dangling and total mass observed on it, the tol stop — is the
-iteration kernel's (iterate.py).
+Iteration control — resume, a commit every iteration (write-behind),
+lineage truncation, one materializing job with the L1 delta, dangling and
+total mass observed on it, the tol stop — is the iteration kernel's
+(iterate.py).
 """
 
 from __future__ import annotations
@@ -58,10 +58,12 @@ from pyspark.sql import functions as F
 from scalemine_spark.checkpoint import CheckpointManager
 from scalemine_spark.graph import vertex_ids
 from scalemine_spark.iterate import iterate, loop_session, resume
+from scalemine_spark.tuning import adaptive_partitions
 
 
-def _prepare(edges: DataFrame, num_partitions: int | None, weight_col: str | None = None):
-    """vertices(id, out_deg) persisted; edges persisted partitioned on src.
+def _prepare(edges: DataFrame, p: int, weight_col: str | None = None):
+    """vertices(id, out_deg) persisted; edges persisted partitioned on src,
+    both at the loop width `p` (tuning.adaptive_partitions).
 
     With weight_col, `out_deg` is the vertex's total OUT-WEIGHT (double,
     Σ of its edge weights) instead of the edge count — every downstream
@@ -69,17 +71,6 @@ def _prepare(edges: DataFrame, num_partitions: int | None, weight_col: str | Non
     through the same column, so the weighted variant reuses the exact
     iteration plan.
     """
-    from scalemine_spark.tuning import adaptive_partitions
-
-    spark = edges.sparkSession
-    # scale-adaptive loop width (round 6, guide §2): derived from the
-    # input's optimizer size estimate, clamped to [defaultParallelism,
-    # session shuffle partitions] — at cluster scale the clamp saturates
-    # at the session width (identical plan to before); at bench scale it
-    # lands at the core count, halving the per-stage task count whose
-    # fixed launch cost dominated the steady-state iteration (measured:
-    # 0.92s -> 0.67s/iter at 2M edges/local[32], tools/profile_iter_r6.py)
-    p = num_partitions or adaptive_partitions(edges)
     # partition the big side on src once, so no iteration shuffles it. The
     # sort is not for the join (a hash join streams the partition as
     # cached): it pins the row order within each partition, and with it
@@ -118,7 +109,7 @@ def _prepare(edges: DataFrame, num_partitions: int | None, weight_col: str | Non
             .repartition(p, "id")
             .persist()
         )
-    return e, verts, p
+    return e, verts
 
 
 def pagerank(
@@ -128,8 +119,6 @@ def pagerank(
     max_iters: int = 100,
     fixed_iters: int | None = None,
     checkpointer: CheckpointManager | None = None,
-    checkpoint_interval: int = 1,
-    num_partitions: int | None = None,
     hub_threshold: int | str | None = "auto",
     hub_floor: int = 1024,
     with_prev: bool = False,
@@ -174,14 +163,12 @@ def pagerank(
     the SpMV multiplies by ew before the same partial agg); weight_col=None
     preserves the unweighted path bit-for-bit.
     """
-    from scalemine_spark.tuning import adaptive_partitions
-
     # the loop's own session at the edge cache's width, AQE off: the
     # committed state stays co-partitioned with the cache (scale notes)
-    p = num_partitions or adaptive_partitions(edges)
+    p = adaptive_partitions(edges)
     with loop_session(edges, p) as (edges, back):
         spark = edges.sparkSession
-        e, verts, p = _prepare(edges, p, weight_col)
+        e, verts = _prepare(edges, p, weight_col)
         # one scalar job yields BOTH |V| and max out-degree — the max lets the
         # 'auto' hub cutoff skip its exact top-K scan entirely on hubless graphs
         # (measured round 3: the orderBy(desc).limit(K) + filter-count job pair
@@ -324,7 +311,7 @@ def pagerank(
             # node computes upstream — drop it from the committed state so the
             # next iteration's join shuffle and the checkpoint ship 3 columns,
             # not 4 (the U6 cogroup consumer passes with_prev=True and keeps the
-            # previous vector). Measured at 16M/local[8] (tools/ab_state_slim.py):
+            # previous vector). Measured at 16M/local[8] (BENCH/ab_state_slim.json):
             # -8% committed-state bytes, -3.3% steady-state iteration wall —
             # modest because the row-cache per-row overhead, not the dropped
             # double, dominates.
@@ -337,7 +324,6 @@ def pagerank(
             total_iters,
             name="pr_stats",
             checkpointer=checkpointer,
-            every=checkpoint_interval,
             scalars={"dm": dangling},
             until=None if fixed_iters is not None else (lambda s, _: s["l1"] < tol),
             record=lambda s: {

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from scalemine_spark.algorithms.pagerank import _prepare
 from scalemine_spark.checkpoint import CheckpointManager
 from scalemine_spark.iterate import iterate, loop_session, resume
+from scalemine_spark.tuning import adaptive_partitions
 
 _MAX_SEED_LITERALS = 100_000
 
@@ -56,7 +57,6 @@ def personalized_pagerank(
     max_iters: int = 100,
     fixed_iters: int | None = None,
     checkpointer: CheckpointManager | None = None,
-    num_partitions: int | None = None,
     exact_sums: bool = False,
 ) -> tuple[DataFrame, dict]:
     """Returns (ranks DF (id, rank), info dict)."""
@@ -69,13 +69,11 @@ def personalized_pagerank(
             f"({_MAX_SEED_LITERALS}); join a teleport table instead"
         )
 
-    from scalemine_spark.tuning import adaptive_partitions
-
     # the loop's own session at the edge cache's width, AQE off (pagerank)
-    p = num_partitions or adaptive_partitions(edges)
+    p = adaptive_partitions(edges)
     with loop_session(edges, p) as (edges, back):
         spark = edges.sparkSession
-        e, verts, _ = _prepare(edges, p)
+        e, verts = _prepare(edges, p)
 
         def _s(col):  # sum, optionally in exact (associative) decimal
             if exact_sums:

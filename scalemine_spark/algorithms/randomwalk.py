@@ -66,13 +66,11 @@ def random_walks(
     seeds: Sequence[int],
     length: int = 10,
     walks_per_seed: int = 1,
-    num_partitions: int | None = None,
 ) -> tuple[DataFrame, dict]:
     """Returns ((seed, walk, step, vertex) DF, info). Deterministic."""
     spark = edges.sparkSession
-    # scale-adaptive loop width (round 6, guide §2) — same derivation and
-    # rationale as pagerank._prepare / tuning.py module docstring
-    p = num_partitions or adaptive_partitions(edges)
+    # scale-adaptive loop width (round 6, guide §2; tuning.py docstring)
+    p = adaptive_partitions(edges)
 
     adj = edges.select("src", "dst").distinct()
     # partition the persisted adjacency on BOTH join keys: the per-step

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from scalemine_spark.checkpoint import CheckpointManager
+from scalemine_spark.graph import vertex_ids
 from scalemine_spark.iterate import iterate, resume
 from scalemine_spark.tuning import adaptive_partitions
 
@@ -58,13 +59,11 @@ def scc(
     max_outer: int = 16,
     max_inner: int = 128,
     checkpointer: CheckpointManager | None = None,
-    num_partitions: int | None = None,
 ) -> tuple[DataFrame, dict]:
     """Returns ((id, scc) DF covering every vertex, info)."""
     spark = edges.sparkSession
-    # scale-adaptive loop width (round 6, guide §2) — same derivation and
-    # rationale as pagerank._prepare / tuning.py module docstring
-    p = num_partitions or adaptive_partitions(edges)
+    # scale-adaptive loop width (round 6, guide §2; tuning.py docstring)
+    p = adaptive_partitions(edges)
 
     e_all = (
         edges.select("src", "dst")
@@ -72,13 +71,7 @@ def scc(
         .distinct()
         .persist()
     )
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .repartition(p, "id")
-        .persist()
-    )
+    verts = vertex_ids(edges).repartition(p, "id").persist()
 
     done, _, start = resume(checkpointer, spark, max_outer)  # accumulated (id, scc)
 

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from scalemine_spark.checkpoint import CheckpointManager
+from scalemine_spark.graph import vertex_ids
 from scalemine_spark.iterate import iterate, materialize, resume
 from scalemine_spark.tuning import adaptive_partitions
 
@@ -45,7 +46,6 @@ def sssp(
     max_rounds: int = 64,
     weight_col: str = "weight",
     checkpointer: CheckpointManager | None = None,
-    num_partitions: int | None = None,
 ) -> tuple[DataFrame, dict]:
     """Returns (dist DF (id, dist) for reached vertices only, info).
 
@@ -53,9 +53,7 @@ def sssp(
     give the exactly-deterministic contract (doubles work but inherit the
     usual float-min caveats on exact ties).
     """
-    return _relax(
-        edges, F.col(weight_col), sources, max_rounds, checkpointer, num_partitions, "improved"
-    )
+    return _relax(edges, F.col(weight_col), sources, max_rounds, checkpointer, "improved")
 
 
 def bfs_hops(
@@ -63,7 +61,6 @@ def bfs_hops(
     sources: Sequence[int],
     max_hops: int = 64,
     checkpointer: CheckpointManager | None = None,
-    num_partitions: int | None = None,
 ) -> tuple[DataFrame, dict]:
     """G7 — multi-source BFS hop distance: SSSP with unit weights.
 
@@ -74,9 +71,7 @@ def bfs_hops(
     exactly the vertices first reached at that hop, so info's
     frontier_sizes[h-1] = #vertices at distance h (0 once converged).
     """
-    dist, info = _relax(
-        edges, F.lit(1).cast("long"), sources, max_hops, checkpointer, num_partitions, "frontier"
-    )
+    dist, info = _relax(edges, F.lit(1).cast("long"), sources, max_hops, checkpointer, "frontier")
     return dist, {
         "hops": info["rounds_run"],
         "frontier_sizes": info["improved_sizes"],
@@ -84,13 +79,12 @@ def bfs_hops(
     }
 
 
-def _relax(edges, weight, sources, max_rounds, checkpointer, num_partitions, metric):
+def _relax(edges, weight, sources, max_rounds, checkpointer, metric):
     """Frontier Bellman-Ford over (src, dst, weight); `metric` names the
     improved-count in the manifest metrics."""
     spark = edges.sparkSession
-    # scale-adaptive loop width (round 6, guide §2) — same derivation and
-    # rationale as pagerank._prepare / tuning.py module docstring
-    p = num_partitions or adaptive_partitions(edges)
+    # scale-adaptive loop width (round 6, guide §2; tuning.py docstring)
+    p = adaptive_partitions(edges)
 
     # partition AND sort the cached edge table once: every round's
     # frontier⋈e sort-merge join then reuses the cached ordering instead
@@ -106,11 +100,7 @@ def _relax(edges, weight, sources, max_rounds, checkpointer, num_partitions, met
     # so this never materializes the vertex table (round 6, guide §2.2 —
     # the former .repartition(p,"id").persist() paid a V-sized exchange
     # plus a full-V cache build to look up a handful of seed ids)
-    verts = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    verts = vertex_ids(e)
 
     state, _, start = resume(checkpointer, spark, max_rounds + 1)  # (id, dist, improved)
     if state is None:

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from scalemine_spark.graph import canonical_undirected
+from scalemine_spark.graph import canonical_undirected, vertex_ids
 
 
 def _oriented(edges: DataFrame) -> DataFrame:
@@ -52,23 +52,11 @@ def _oriented(edges: DataFrame) -> DataFrame:
 
 
 def _closed_wedges(edges: DataFrame) -> DataFrame:
-    from scalemine_spark.tuning import adaptive_partitions
-
-    # persist the oriented set partitioned AND sorted on the wedge corner:
-    # both sides of the wedge self-join read the cache's hash(lo)
-    # partitioning and (lo, hi) ordering, so the join runs with ZERO
-    # exchanges and ZERO sorts (round 6; previously each side re-exchanged
-    # all E rows on x). The close-side semi join still exchanges on the
-    # canonical (y, z) pair — that one carries the wedge mass and is
-    # irreducible without broadcasting E. Width is scale-adaptive
-    # (tuning.py): session-width at cluster scale, core-count locally.
-    p = adaptive_partitions(edges)
-    o = (
-        _oriented(edges)
-        .repartition(p, "lo")
-        .sortWithinPartitions("lo", "hi")
-        .persist()
-    )
+    # the oriented set feeds both wedge sides and the close: computed once.
+    # It is not laid out on `lo` for the self-join: the planner broadcasts
+    # one side under AQE, or re-exchanges both sides on `x`, so no plan
+    # read that layout and its build paid an E-sized Exchange and Sort.
+    o = _oriented(edges).persist()
     e1 = o.select(F.col("lo").alias("x"), F.col("hi").alias("y"))
     e2 = o.select(F.col("lo").alias("x"), F.col("hi").alias("z"))
     wedges = e1.join(e2, "x").filter(F.col("y") < F.col("z"))
@@ -96,11 +84,6 @@ def triangles_per_vertex(edges: DataFrame) -> DataFrame:
         .unionAll(tri.select(F.col("c").alias("id")))
     )
     per = corners.groupBy("id").agg(F.count("*").alias("triangles"))
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    return verts.join(per, "id", "left").select(
+    return vertex_ids(edges).join(per, "id", "left").select(
         "id", F.coalesce("triangles", F.lit(0)).alias("triangles")
     )

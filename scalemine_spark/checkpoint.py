@@ -32,8 +32,8 @@ returns, so a fresh manager sees the final iteration once the call is
 back.
 
 Memory: the materialized state lives in executor block storage until the
-algorithm drops it — the same footprint as the `checkpoint_interval>1`
-path, which localCheckpoints the iterations it does not commit.
+algorithm drops it — the same footprint as the localCheckpoint a loop
+runs without a checkpointer.
 
 Crash semantics: `latest()` ignores data dirs without manifests, so a crash
 at any point loses at most the one in-flight iteration; resume restarts from

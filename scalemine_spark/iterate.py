@@ -10,11 +10,11 @@ lazy next state, aggregates observed on it, and optionally the columns to
 keep after observing. `state` is the last materialized frame, `prev` the
 previous iteration's scalars (the caller's initial ones at first). Per
 iteration the kernel runs ONE materializing job, with the aggregates riding
-it as an Observation: `checkpointer.commit` every `every` iterations and on
-the last one (write-behind, checkpoint.py), `localCheckpoint(eager=True)`
-otherwise. Both truncate the lineage — the state is referenced twice per
-step, so an untruncated plan doubles every iteration and Catalyst analysis
-blows up around iteration ~20 (SURVEY §4.3.1). The scalars (NULL read as 0:
+it as an Observation: `checkpointer.commit` (write-behind, checkpoint.py),
+or `localCheckpoint(eager=True)` without a checkpointer. Both truncate the
+lineage — the state is referenced twice per step, so an untruncated plan
+doubles every iteration and Catalyst analysis blows up around iteration
+~20 (SURVEY §4.3.1). The scalars (NULL read as 0:
 a SUM over zero rows) are then amended into the committed manifest with
 `iter_seconds` — commit first, so manifests go v0 then v1 — and
 `until(scalars, prev)` may stop the loop. The last publish is flushed
@@ -126,7 +126,6 @@ def iterate(
     *,
     name: str,
     checkpointer: CheckpointManager | None = None,
-    every: int = 1,
     scalars: dict | None = None,
     until: Callable[[dict, dict | None], bool] | None = None,
     record: Callable[[dict], dict] | None = None,
@@ -141,10 +140,9 @@ def iterate(
         frame = frame.observe(obs, *(c.alias(k) for k, c in cols.items()))
         if keep and keep[0] is not None:
             frame = frame.select(*keep[0])
-        commit = checkpointer is not None and (it % every == 0 or it == stop - 1)
-        state = materialize(frame, it, checkpointer if commit else None)
+        state = materialize(frame, it, checkpointer)
         prev, scalars = scalars, {k: 0 if v is None else v for k, v in obs.get.items()}
-        if commit:
+        if checkpointer is not None:
             metrics = record(scalars) if record is not None else scalars
             checkpointer.amend_metrics(it, {**metrics, "iter_seconds": time.monotonic() - t_it})
         seconds.append(time.monotonic() - t_it)

@@ -139,8 +139,8 @@ def asof(
     map-side combine means ~1 scalar per task reaches the driver).
 
     The ``merge_above`` crossover (default 300 snapshots on the hottest
-    key) comes from the measured A/B (tools/ab_asof.py -> BENCH/
-    ab_asof.json, 10^6 probes/local[8]): at max-per-key 100 the range arm
+    key) comes from the measured A/B (BENCH/ab_asof.json, 10^6
+    probes/local[8]): at max-per-key 100 the range arm
     wins (5.7s vs 7.3s), at 1,000 the merge arm wins (2.6s vs 6.1s) and the
     gap grows ~linearly in the hot key's fan-out (58s vs 2.6s at 10,000) —
     the geometric midpoint ~316 splits the measured bracket.

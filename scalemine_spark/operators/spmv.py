@@ -15,6 +15,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from scalemine_spark.graph import vertex_ids
+
 
 def spmv_partial_arrow(edges_w: DataFrame) -> DataFrame:
     """edges_w: (src, dst, w). Returns (dst, contrib) = SUM(w) GROUP BY dst,
@@ -35,12 +37,7 @@ def spmv_partial_arrow(edges_w: DataFrame) -> DataFrame:
 def pagerank_first_contribs(edges: DataFrame) -> DataFrame:
     """One SpMV step from the uniform initial rank vector r0 = 1/N:
     contrib(dst) = Σ_{src→dst} (1/N)/outdeg(src). Oracle-checkable."""
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    n = verts.count()
+    n = vertex_ids(edges).count()
     outd = edges.groupBy("src").agg(F.count("*").alias("od"))
     w = outd.select("src", (F.lit(1.0 / n) / F.col("od")).alias("w"))
     edges_w = edges.join(w, "src").select("src", "dst", "w")

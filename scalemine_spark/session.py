@@ -43,8 +43,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # measured (tools/sweep_pr.py): 8g outruns 28g by 2-3x on this box's
-        # G1/JDK17 (large heaps regress the iterative loops badly)
+        # measured (a heap x cores x AQE sweep of the pagerank loop, commit
+        # 82fff62): 8g outran 28g by 2-3x on G1/JDK17 (large heaps regress
+        # the iterative loops badly)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from scalemine_spark.graph import vertex_ids
+
 
 def read_lg(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     """Returns (vertices(id, label), edges(src, dst, label))."""
@@ -40,11 +42,8 @@ def read_lg(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
 def write_lg(edges: DataFrame, path: str, vertex_label=None) -> None:
     """Serialize an (src, dst) edge DataFrame to `.lg` (labels default 0).
     Distributed text write; one file per partition."""
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .select(F.concat_ws(" ", F.lit("v"), F.col("id"), F.lit("0")).alias("value"))
+    verts = vertex_ids(edges).select(
+        F.concat_ws(" ", F.lit("v"), F.col("id"), F.lit("0")).alias("value")
     )
     elines = edges.select(
         F.concat_ws(" ", F.lit("e"), F.col("src"), F.col("dst"), F.lit("0")).alias("value")

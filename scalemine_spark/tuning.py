@@ -8,7 +8,7 @@ working set is a few hundred thousand rows — at bench scale that is
 64 near-empty tasks per stage, 3+ stages per iteration, and the fixed
 task-launch cost dominates the iteration (measured round 6: PageRank
 steady-state iteration 0.92s at p=64 vs 0.67s at p=32 on the 2M-edge
-fixture, tools/profile_iter_r6.py).
+fixture, OPTIMIZATION_r06.md).
 
 ``adaptive_partitions`` derives the loop parallelism from the *input's*
 optimizer size estimate (exact for materialized caches, file-size-based
@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 # ~256k of the 16-byte edge/state rows per task (estimator bytes; cached
 # relations estimate ~16 B/row). Calibrated from BOTH ends (round 6):
 # at 2M edges the derivation must land at defaultParallelism (0.92 ->
-# 0.67 s/iter measured, tools/profile_iter_r6.py), and by ~16M edges it
+# 0.67 s/iter measured, OPTIMIZATION_r06.md), and by ~16M edges it
 # should be back at the session width — the 16M-edge holdout
 # (order-swapped pairs to cancel first-position warm-up bias,
 # BENCH/ab_scale_r6_4mb.json) measured parity with the pinned session
@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame
 TARGET_BYTES_PER_PARTITION = 4 << 20
 
 
-def adaptive_partitions(df: DataFrame, session_p: int | None = None) -> int:
+def adaptive_partitions(df: DataFrame) -> int:
     """Loop parallelism for an iterative algorithm over ``df``.
 
     clamp(ceil(sizeInBytes / TARGET_BYTES_PER_PARTITION),
@@ -48,8 +48,7 @@ def adaptive_partitions(df: DataFrame, session_p: int | None = None) -> int:
     docstring. Falls back to the session width if the estimate is
     unavailable."""
     spark = df.sparkSession
-    if session_p is None:
-        session_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    session_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     dp = max(1, spark.sparkContext.defaultParallelism)
     try:
         size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())

@@ -140,7 +140,7 @@ def test_prepare_fused_verts_corner_graph(spark):
 
     pairs = [(1, 2), (1, 2), (2, 3), (3, 3), (4, 5), (7, 5)]  # 5 is sink-only
     e = edges_df(spark, pairs)
-    _, verts, _ = _prepare(e, num_partitions=4)
+    _, verts = _prepare(e, 4)
     got = {r["id"]: r["out_deg"] for r in verts.collect()}
     exp = {}
     for s, d in pairs:

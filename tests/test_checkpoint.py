@@ -109,14 +109,6 @@ def test_metrics_history_complete(spark, tmp_path):
     assert all(abs(h["total_mass"] - 1.0) < 1e-9 for h in hist)
 
 
-def test_checkpoint_interval(spark, tmp_path):
-    e = edges_df(spark, FX.G_LINE)
-    ck = CheckpointManager(str(tmp_path), "r", "pagerank")
-    pagerank(e, fixed_iters=6, checkpointer=ck, checkpoint_interval=2)
-    committed = sorted(ck._versions().keys())
-    assert committed == [0, 2, 4, 5]  # every 2nd + the final iteration
-
-
 def test_cc_checkpoint_resume(spark, tmp_path):
     pairs = FX.G_TWO_CC + [(20, 21), (21, 22)]
     e = edges_df(spark, pairs)

@@ -325,7 +325,19 @@ def _steady_plans(monkeypatch, runs) -> list:
     return last
 
 
-def test_pagerank_steady_iteration_is_two_shuffled_hash_joins(spark, monkeypatch):
+def _karate_from_parquet(spark, tmp_path):
+    """The karate edges read back from parquet: unlike an in-memory frame
+    (a LogicalRDD, no size estimate, so the session width), a file scan is
+    estimated, and `adaptive_partitions` narrows it to the core count."""
+    from scalemine_spark import fixtures as FX
+    from tests.conftest import edges_df
+
+    path = str(tmp_path / "karate")
+    edges_df(spark, FX.g_karate_like()).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_pagerank_steady_iteration_is_two_shuffled_hash_joins(spark, monkeypatch, tmp_path):
     """The SpMV join (edge cache ⋈ rank/out_deg) and the state update join
     (state ⋈ contribs) of a steady pagerank and ppr iteration are both
     shuffled-hash joins built on the vertex-sized side: no sort-merge join,
@@ -339,17 +351,20 @@ def test_pagerank_steady_iteration_is_two_shuffled_hash_joins(spark, monkeypatch
     caller's (where the edge cache used to be re-shuffled every iteration)."""
     from scalemine_spark import fixtures as FX
     from scalemine_spark.algorithms import pagerank, personalized_pagerank
+    from scalemine_spark.tuning import adaptive_partitions
     from tests.conftest import edges_df
 
     e = edges_df(spark, FX.g_karate_like())
+    narrow = _karate_from_parquet(spark, tmp_path)
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert adaptive_partitions(narrow) == width // 2  # a width other than the caller's
     frames = _steady_plans(
         monkeypatch,
         [
             lambda: pagerank(e, fixed_iters=3),
             lambda: personalized_pagerank(e, [0, 1], fixed_iters=3),
-            lambda: pagerank(e, fixed_iters=3, num_partitions=width // 2),
-            lambda: personalized_pagerank(e, [0, 1], fixed_iters=3, num_partitions=width // 2),
+            lambda: pagerank(narrow, fixed_iters=3),
+            lambda: personalized_pagerank(narrow, [0, 1], fixed_iters=3),
         ],
     )
     for frame in frames:
@@ -367,7 +382,7 @@ def test_pagerank_steady_iteration_is_two_shuffled_hash_joins(spark, monkeypatch
         assert not _fed_through_exchange(lines, "InMemoryTableScan"), plan
 
 
-def test_labelprop_steady_iteration_broadcasts_nothing(spark, monkeypatch):
+def test_labelprop_steady_iteration_broadcasts_nothing(spark, monkeypatch, tmp_path):
     """A steady LPA iteration joins the symmetrized edge cache with the
     labels and the labels with the new labels as shuffled-hash joins built
     on the vertex side, in its own session at the cache's width with AQE
@@ -376,15 +391,18 @@ def test_labelprop_steady_iteration_broadcasts_nothing(spark, monkeypatch):
     into a join. Its two Exchanges are the (id, label) and id aggregates."""
     from scalemine_spark import fixtures as FX
     from scalemine_spark.algorithms import label_propagation
+    from scalemine_spark.tuning import adaptive_partitions
     from tests.conftest import edges_df
 
     e = edges_df(spark, FX.g_karate_like())
+    narrow = _karate_from_parquet(spark, tmp_path)
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert adaptive_partitions(narrow) == width // 2  # a width other than the caller's
     frames = _steady_plans(
         monkeypatch,
         [
             lambda: label_propagation(e, iters=3),
-            lambda: label_propagation(e, iters=3, num_partitions=width // 2),
+            lambda: label_propagation(narrow, iters=3),
         ],
     )
     for frame in frames:
